@@ -181,7 +181,7 @@ class EnrichService(embedder: Embedder, tagger: Tagger,
     val embedded = withEmb.filter(col("embedding").isNotNull).cache()
     val pairs = similarityPairs(embedded, threshold, strategy).cache()
     val verts = embedded.select("id")
-    val comps = Components.connectedComponentsGraphX(verts, pairs)
+    val comps = Components.connectedComponentsFast(verts, pairs)
     val nLinks = pairs.count()
     // clusters with >= 2 members, sorted by size desc then min id
     val clusters = comps.groupBy("component")
@@ -274,7 +274,7 @@ class EnrichService(embedder: Embedder, tagger: Tagger,
     val edges = db.nodes
       .select(col("id").as("id_a"), explode(col("linkedNodes")).as("id_b"))
       .filter(col("id_a") < col("id_b"))
-    val comps = Components.connectedComponentsGraphX(db.nodes.select("id"), edges)
+    val comps = Components.connectedComponentsFast(db.nodes.select("id"), edges)
     Components.clusterSummary(db.nodes, comps)
   }
 }

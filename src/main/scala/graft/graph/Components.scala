@@ -1,115 +1,34 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components — the Spark-native replacement for the
   * reference's two hand-rolled traversals (recursive DFS over
   * similarity edges, src/embedding/Clustering.cpp:68-107, and BFS over
   * stored links, src/tagging/TagService.cpp:169-255). Both produce the
-  * same equivalence classes; component label = min member id, which is
-  * also what GraphX's Pregel CC converges to.
+  * same equivalence classes; component label = min member id.
   *
-  * Two implementations:
-  *  - `connectedComponentsGraphX`: Pregel (the scale path — no driver
-  *    state, no recursion-depth limits).
-  *  - `connectedComponentsDF`: pure-DataFrame iterative min-label
-  *    propagation with a convergence check — useful where GraphX's
-  *    RDD round-trip is unwanted; rounds = graph diameter.
-  *
-  * Isolated vertices (no edges) form singleton components in both.
+  * One implementation, `connectedComponentsFast`: min-label propagation
+  * with pointer jumping on co-partitioned pair RDDs, run on the shared
+  * `GraphLoop` round scaffold. Isolated vertices (no edges) form
+  * singleton components.
   */
 object Components {
 
-  /** vertices: single id column; edges: (id_a, id_b) undirected.
-    * Returns (id, component) with component = min id reachable.
-    */
-  def connectedComponentsGraphX(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val vidName = vertices.columns.head
-    val vRdd = vertices.select(col(vidName).cast("long")).rdd
-      .map(r => (r.getLong(0), ()))
-    val eRdd = edges.select(col(edges.columns.head).cast("long"),
-        col(edges.columns(1)).cast("long")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph(vRdd, eRdd, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    graph.connectedComponents().vertices
-      .map { case (id, comp) => (id, comp) }
-      .toDF("id", "component")
-  }
-
-  /** Iterative min-label propagation in pure DataFrames. Converges in
-    * <= diameter rounds; each round is one shuffle (groupBy id). A
-    * `localCheckpoint` every round truncates the growing lineage.
-    */
-  def connectedComponentsDF(vertices: DataFrame, edges: DataFrame,
-                            maxIter: Int = 50): DataFrame = {
-    val vidName = vertices.columns.head
-    // materialize the edge list ONCE before symmetrizing — the union
-    // reads it twice, and edge generation is often the expensive part
-    // (e.g. an all-pairs similarity join upstream)
-    val e0 = edges.select(col(edges.columns.head).cast("long").as("src"),
-        col(edges.columns(1)).cast("long").as("dst"))
-      .localCheckpoint()
-    val sym = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    var labels = vertices.select(col(vidName).cast("long").as("id"))
-      .withColumn("component", col("id")).localCheckpoint()
-    // labels only ever decrease, so sum(component) is strictly monotone
-    // while anything changes — convergence check is one cheap aggregate,
-    // not a join
-    def labelSum(df: DataFrame): Long =
-      df.agg(sum(col("component"))).collect()(0).getLong(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // neighbor-min propagation (join + groupBy + left join back —
-      // avoids a Union, which trips Catalyst constraint rewriting when
-      // a branch shares lineage with the join input)
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .groupBy(col("src").as("id2")).agg(min(col("component")).as("nbr_comp"))
-      val prop = labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_comp"), col("component")))
-            .as("component"))
-        .localCheckpoint()
-      // pointer jumping: follow the label's own label (labels are always
-      // vertex ids, so the lookup self-join hits). Halves chain lengths
-      // every round → O(log diameter) rounds instead of O(diameter).
-      labels = prop.as("x")
-        .join(prop.select(col("id").as("cid"), col("component").as("ccomp")).as("y"),
-          col("x.component") === col("y.cid"), "left")
-        .select(col("x.id").as("id"),
-          least(col("x.component"), coalesce(col("ccomp"), col("x.component")))
-            .as("component"))
-        .localCheckpoint()
-      val s = labelSum(labels)
-      converged = s == prevSum
-      prevSum = s
-      i += 1
-    }
-    labels
-  }
-
   /** Connected components on raw RDDs with pointer jumping — the
-    * engine's default CC. Iterative label propagation is the one place
-    * the DataFrame API is the wrong substrate: every round pays
-    * Catalyst + AQE planning and eager-checkpoint jobs (~0.4 s/round
-    * regardless of data size), while an RDD round on co-partitioned
-    * pair RDDs is a few milliseconds. Same min-label semantics as the
-    * other two implementations; pointer jumping (follow the label's own
-    * label each round) converges in O(log diameter) rounds, so a
-    * 100 TB-scale chain still finishes in ~40 rounds where naive
-    * propagation needs millions.
-    * Partition count is sized to the data (1 task per ~500k elements,
-    * capped at cluster parallelism) — tiny graphs run single-task,
-    * huge graphs spread.
+    * engine's CC. vertices: single id column; edges: (id_a, id_b)
+    * undirected. Returns (id, component) with component = min id
+    * reachable. Iterative label propagation is the one place the
+    * DataFrame API is the wrong substrate: every round pays Catalyst +
+    * AQE planning and eager-checkpoint jobs (~0.4 s/round regardless of
+    * data size), while an RDD round on co-partitioned pair RDDs is a few
+    * milliseconds. Pointer jumping (follow the label's own label each
+    * round) converges in O(log diameter) rounds, so a 100 TB-scale chain
+    * still finishes in ~40 rounds where naive propagation needs
+    * millions. Not converging within `maxIter` rounds is an error, never
+    * a partial labeling.
     */
   def connectedComponentsFast(vertices: DataFrame, edges: DataFrame,
                               maxIter: Int = 100): DataFrame =
@@ -127,80 +46,51 @@ object Components {
                                      maxIter: Int = 100): (DataFrame, Int) = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val vidName = vertices.columns.head
-    val vRdd = vertices.select(col(vidName).cast("long")).as[Long].rdd
-    // cache the edge DATAFRAME, not the RDD: DataFrame caching is
-    // plan-keyed, so other queries deriving the same edge set (e.g. a
-    // cluster-size query after a components query) reuse the
-    // materialization across the session
-    val eDf = edges.select(col(edges.columns.head).cast("long"),
-      col(edges.columns(1)).cast("long")).cache()
-    val eRdd = eDf.as[(Long, Long)].rdd
-    // size partitions from the edge count alone (CC work is
-    // edge-dominated; defaultParallelism caps the vertex-heavy case).
-    // ~50k symmetrized edges per task (r13, guide §2: the old ~170k/task
-    // sizing left q144's 525k-edge graph on 3 of 32 cores — measured
-    // 0.7 s/round; task skew, not bytes, is the constraint because a
-    // round's work is join+reduce over boxed pair RDDs)
-    val nE = eDf.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var tDbg = System.nanoTime()
-    def lap(label: String): Unit = if (dbg) {
-      System.err.println(f"[cc] $label: ${(System.nanoTime() - tDbg) / 1e9}%.3fs")
-      tDbg = System.nanoTime()
+    val vRdd = vertices.select(col(vertices.columns.head).cast("long")).as[Long].rdd
+    GraphLoop.run { loop =>
+      // persisted at the RDD level, not as a catalog cache entry: the
+      // edge count materializes it, the symmetrized edges read it, and
+      // the loop releases it, so a long-lived session never piles up
+      // cache entries. Duplicate edges are harmless to min-propagation:
+      // no distinct()
+      val eRdd = loop.persist(edges.select(col(edges.columns.head).cast("long"),
+        col(edges.columns(1)).cast("long")).as[(Long, Long)].rdd)
+      val (sym, part) = loop.edges(eRdd)(
+        _.flatMap { case (a, b) => Iterator((a, b), (b, a)) })
+      // seed labels at min(own id, min neighbor id) — exactly what the
+      // first propagate step over identity labels computes, for ONE
+      // reduceByKey instead of a full propagate+jump round (the
+      // fixpoint — min id per component — is unchanged, and seed labels
+      // are still vertex ids so pointer jumping stays valid)
+      var labels = loop.persist(sym.union(vRdd.map(id => (id, id)))
+        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
+      var prevSum = -1L // first round always runs; sum only ever decreases
+      var converged = false
+      while (!converged) {
+        if (loop.rounds == maxIter)
+          throw new IllegalStateException(s"connected components did not " +
+            s"converge in ${loop.rounds} rounds (maxIter = $maxIter)")
+        // propagate: each vertex takes min(own label, neighbor labels)
+        val merged = sym.join(labels)
+          .map { case (_, (nbr, comp)) => (nbr, comp) }
+          .union(labels)
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        // pointer jump: label(label(v)) — labels are always vertex ids,
+        // so the lookup join always hits
+        val jumped = merged.map { case (id, comp) => (comp, id) }
+          .join(merged)
+          .map { case (comp, (id, cc)) => (id, math.min(comp, cc)) }
+          .partitionBy(part)
+        // labels only ever decrease, so their sum is strictly monotone
+        // while anything changes: the convergence test is one fold
+        val s = loop.advance(jumped, labels)(_.map(_._2).fold(0L)(_ + _))
+        labels = jumped
+        converged = s == prevSum
+        prevSum = s
+      }
+      loop.retain(labels) // backs the returned DataFrame
+      (labels.toDF("id", "component"), loop.rounds)
     }
-    lap("setup-counts")
-    // duplicate edges are harmless to min-propagation: skip distinct().
-    // No up-front count: the first round's action materializes the
-    // persisted RDD, so a separate job buys nothing (r13)
-    val sym = eRdd.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    lap("sym-materialize")
-    // seed labels at min(own id, min neighbor id) — exactly what the
-    // first propagate step over identity labels computes, for ONE
-    // reduceByKey instead of a full propagate+jump round (r13: saves a
-    // round's 3 shuffles + action on every CC call; the fixpoint —
-    // min id per component — is unchanged, and seed labels are still
-    // vertex ids so pointer jumping stays valid)
-    var labels = sym.union(vRdd.map(id => (id, id)))
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def sumLabels(r: org.apache.spark.rdd.RDD[(Long, Long)]): Long =
-      r.map(_._2).fold(0L)(_ + _)
-    var prevSum = -1L // first round always runs; sum only ever decreases
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // propagate: each vertex takes min(own label, neighbor labels)
-      val merged = sym.join(labels)
-        .map { case (_, (nbr, comp)) => (nbr, comp) }
-        .union(labels)
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      // pointer jump: label(label(v)) — labels are always vertex ids,
-      // so the lookup join always hits
-      val jumped = merged.map { case (id, comp) => (comp, id) }
-        .join(merged)
-        .map { case (comp, (id, cc)) => (id, math.min(comp, cc)) }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val s = sumLabels(jumped)
-      labels.unpersist(false)
-      labels = jumped
-      converged = s == prevSum
-      prevSum = s
-      i += 1
-      lap(s"round-$i")
-    }
-    // labels stays persisted (it backs the returned DataFrame); the
-    // symmetrized working set is loop-internal and can go. eDf is kept
-    // deliberately: its cache is plan-keyed, so sibling queries deriving
-    // the same edge set reuse the materialization (see above).
-    sym.unpersist(false)
-    (labels.toDF("id", "component"), i)
   }
 
   /** Global row number 1..n WITHOUT a single-partition window: a
@@ -239,12 +129,6 @@ object Components {
     spark.createDataFrame(rdd, schema)
   }
 
-  /** V8-style cluster summary (reference: TagService.cpp:169-255):
-    * group members per component, compute sharedTags (tags held by >= 2
-    * members; singleton clusters keep all their tags), sort clusters by
-    * size desc and reassign ids 1..n (size desc, then min-member-id asc
-    * for determinism).
-    */
   /** Synchronous label-propagation community detection (Raghavan et
     * al., Phys. Rev. E 76, 2007): every vertex starts labeled with its
     * own id; each round it adopts the most frequent label among its
@@ -279,23 +163,20 @@ object Components {
     val Shift = 1L << 31
     val spark = vertices.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val eRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .na.drop() // a null endpoint matched nothing in the DF join
       .as[(Long, Long)].rdd
-    val nE = eRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val e = eRdd.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    val (e, part) = GraphLoop.edges(eRdd)(identity)
     var labels = vertices.select(col("id").cast("long")).as[Long].rdd
       .map(id => (id, id))
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // shared edge step only: the rounds are one lazy chain with no
+    // action of their own, run by the caller's action
     for (_ <- 1 to iters) {
       val best = e.join(labels) // narrow: both sides carry `part`
         .map { case (_, (dst, lab)) => ((dst, lab), 1L) }
-        .reduceByKey(_ + _, parts)
+        .reduceByKey(part, _ + _)
         .map { case ((dst, lab), c) => (dst, (Shift - c) * Shift + lab) }
         .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
         .mapValues(enc => enc & (Shift - 1))
@@ -358,6 +239,12 @@ object Components {
       .select(col("family_size"), col("n_families"),
         (col("family_size") * col("n_families")).as("n_members"))
 
+  /** V8-style cluster summary (reference: TagService.cpp:169-255):
+    * group members per component, compute sharedTags (tags held by >= 2
+    * members; singleton clusters keep all their tags), sort clusters by
+    * size desc and reassign ids 1..n (size desc, then min-member-id asc
+    * for determinism).
+    */
   def clusterSummary(nodesWithTags: DataFrame, components: DataFrame): DataFrame = {
     val joined = nodesWithTags.select(col("id"), col("tags"))
       .join(components, "id")

@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** HITS (Kleinberg hubs & authorities) over a DIRECTED edge list —
   * the link-analysis complement of [[PageRank]]: authorities are
@@ -30,8 +29,7 @@ import org.apache.spark.storage.StorageLevel
   * order-free, which is why this operator is fixed-point at all.
   *
   * Scale notes: shuffle per round is edge-proportional; state is one
-  * row per vertex; partitions size to the edge count (~50k edges/task
-  * like the CC loop, capped at cluster parallelism).
+  * row per vertex; partitions size to the edge count (`GraphLoop.edges`).
   */
 object Hits {
 
@@ -55,70 +53,55 @@ object Hits {
     require(iters >= 1, "iters must be >= 1")
     val spark = vertices.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     import org.apache.spark.sql.functions.col
     val eRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].rdd
-    val nE = eRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    // forward edges keyed by src (authority update pulls hub mass in),
-    // reversed edges keyed by dst (hub update pulls fresh auth back out)
-    val eF = eRdd.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    val eR = eRdd.map(_.swap).partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // state: (id, (auth, hub)) — exactly the vertex rows, like the
-    // DataFrame form (edge endpoints outside the vertex table
-    // contribute nothing and are dropped by the state join-back)
-    var state = vertices.select(col(vertices.columns(0)).cast("long"))
-      .as[Long].rdd
-      .map(id => (id, (Scale, Scale)))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iters) {
-      // authority update: sum incoming hub mass per dst, max-normalize
-      val authIn = eF.join(state)
-        .map { case (_, (dst, (_, hub))) => (dst, hub) }
-        .reduceByKey(part, (a: Long, b: Long) => a + b)
-      val rawA = state.leftOuterJoin(authIn, part)
-        .mapPartitions(_.map { case (id, ((_, hub), in)) =>
-          (id, (in.getOrElse(0L), hub))
-        }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val maxA = math.max(rawA.map(_._2._1).fold(0L)(math.max), 1L)
-      val withAuth = rawA
-        .mapPartitions(_.map { case (id, (raw, hub)) =>
-          (id, (norm(raw, maxA), hub))
-        }, preservesPartitioning = true)
-      // hub update: sum outgoing (fresh) authority mass, max-normalize
-      val hubIn = eR.join(withAuth)
-        .map { case (_, (src, (auth, _))) => (src, auth) }
-        .reduceByKey(part, (a: Long, b: Long) => a + b)
-      val rawH = withAuth.leftOuterJoin(hubIn, part)
-        .mapPartitions(_.map { case (id, ((auth, _), in)) =>
-          (id, (auth, in.getOrElse(0L)))
-        }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val maxH = math.max(rawH.map(_._2._2).fold(0L)(math.max), 1L)
-      val next = rawH
-        .mapPartitions(_.map { case (id, (auth, raw)) =>
-          (id, (auth, norm(raw, maxH)))
-        }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // materialize next BEFORE dropping its ancestors' blocks — a
-      // narrow pass over the (already materialized) rawH; otherwise the
-      // next round's first fold would recompute the whole round chain
-      next.count()
-      rawA.unpersist(false)
-      state.unpersist(false)
-      rawH.unpersist(false)
-      state = next
+    GraphLoop.run { loop =>
+      // forward edges keyed by src (authority update pulls hub mass in),
+      // reversed edges keyed by dst (hub update pulls fresh auth back out)
+      val (eF, part) = loop.edges(eRdd)(identity)
+      val eR = loop.persist(eRdd.map(_.swap).partitionBy(part))
+      // state: (id, (auth, hub)) — exactly the vertex rows, like the
+      // DataFrame form (edge endpoints outside the vertex table
+      // contribute nothing and are dropped by the state join-back)
+      var state = loop.persist(vertices.select(col(vertices.columns(0)).cast("long"))
+        .as[Long].rdd
+        .map(id => (id, (Scale, Scale)))
+        .partitionBy(part))
+      for (_ <- 1 to iters) {
+        // authority update: sum incoming hub mass per dst, max-normalize
+        val authIn = eF.join(state)
+          .map { case (_, (dst, (_, hub))) => (dst, hub) }
+          .reduceByKey(part, (a: Long, b: Long) => a + b)
+        val rawA = loop.persist(state.leftOuterJoin(authIn, part)
+          .mapPartitions(_.map { case (id, ((_, hub), in)) =>
+            (id, (in.getOrElse(0L), hub))
+          }, preservesPartitioning = true))
+        val maxA = math.max(rawA.map(_._2._1).fold(0L)(math.max), 1L)
+        val withAuth = rawA
+          .mapPartitions(_.map { case (id, (raw, hub)) =>
+            (id, (norm(raw, maxA), hub))
+          }, preservesPartitioning = true)
+        // hub update: sum outgoing (fresh) authority mass, max-normalize
+        val hubIn = eR.join(withAuth)
+          .map { case (_, (src, (auth, _))) => (src, auth) }
+          .reduceByKey(part, (a: Long, b: Long) => a + b)
+        val rawH = loop.persist(withAuth.leftOuterJoin(hubIn, part)
+          .mapPartitions(_.map { case (id, ((auth, _), in)) =>
+            (id, (auth, in.getOrElse(0L)))
+          }, preservesPartitioning = true))
+        val maxH = math.max(rawH.map(_._2._2).fold(0L)(math.max), 1L)
+        val next = rawH
+          .mapPartitions(_.map { case (id, (auth, raw)) =>
+            (id, (auth, norm(raw, maxH)))
+          }, preservesPartitioning = true)
+        // the count is a narrow pass over the (already materialized) rawH
+        loop.advance(next, rawA, state, rawH)(_.count())
+        state = next
+      }
+      loop.retain(state)
+      state.map { case (id, (auth, hub)) => (id, auth, hub) }
+        .toDF("id", "auth", "hub")
     }
-    val out = state.map { case (id, (auth, hub)) => (id, auth, hub) }
-      .toDF("id", "auth", "hub")
-    eF.unpersist(false)
-    eR.unpersist(false)
-    out
   }
 }

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixed-point PageRank with damping 0.85 over a directed edge list.
@@ -22,8 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the loop is iters × (one equi-join + one integer-sum
   * shuffle) — the textbook distributed PageRank shape, one Spark job
-  * per round. `localCheckpoint` truncates lineage each round; the
-  * dangling term folds in as a broadcast single-row aggregate.
+  * per round: the dangling-mass fold, which also materializes the
+  * round's state (`GraphLoop`).
   * Mass bound: total mass is ~N·scale in every variant (uniform spreads
   * it, personalized concentrates it), and in the worst case one vertex
   * receives all of it, so the 85× damping product needs
@@ -78,11 +79,6 @@ object PageRank {
       baseTerm = (n, id) => if (id == source) (15L * scale * n) / 100L else 0L,
       dangShare = (_, dang, id) => if (id == source) dang else 0L)
 
-  /** Shared fixed-point loop. `initRank(n)` seeds the rank column;
-    * `baseTerm(n, scale, id)` is the per-vertex teleport term;
-    * `danglingSql(n)` is a SQL fragment over columns (id, __dang)
-    * yielding each vertex's share of the dangling mass.
-    */
   /** Shared fixed-point loop, on raw co-partitioned RDDs (r13 — the
     * same substrate switch the CC loop made, for the same reason:
     * every DataFrame round paid Catalyst + AQE planning, a broadcast
@@ -122,57 +118,56 @@ object PageRank {
       .map { case (src, dst, w) => (src, (dst, w)) }
     val vRdd = vertices.select(col(vertices.columns(0)).cast("long"))
       .distinct().as[Long].rdd
-    // partition sizing: edge-proportional like the CC loop (~50k edges
-    // per task, capped at cluster parallelism; tiny graphs single-task)
-    val nE = eRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val e = eRdd.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumw = e.mapValues(_._2).reduceByKey(part, (a: Long, b: Long) => a + b)
-    // (id, sumw) co-partitioned with the edges — cached: the seed state
-    // derives from it and the count below materializes it
-    val base = vRdd.map(id => (id, ())).partitionBy(part)
-      .leftOuterJoin(sumw, part)
-      .mapValues { case (_, sw) => sw.getOrElse(0L) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = base.count()
-    if (n == 0)
-      return spark.createDataset(sc.emptyRDD[(Long, Long)])
-        .toDF("id", "rank")
-    // worst-case overflow bound for EVERY variant: total mass ≈ n·scale
-    // and a single vertex can in principle receive all of it, so the
-    // 85× damping product needs 100·n·scale < 2⁶³. Enforced here (not
-    // just documented) so a too-large graph fails loudly instead of
-    // silently wrapping ranks; drop `scale` to trade precision for size.
-    require(n <= Long.MaxValue / 100L / scale,
-      s"PageRank: n*scale = $n*$scale would overflow the 85x damping " +
-        "product in the worst case - use a smaller scale")
-    // state: (id, (sumw, rank)), partitioning preserved from base
-    var state = base
-      .mapPartitions(_.map { case (id, sw) => (id, (sw, initRank(n, id))) },
-        preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iters) {
-      // dangling mass: one exact long fold (also materializes `state`,
-      // so each round is one action like the CC loop's convergence sum)
-      val dang = state.filter(_._2._1 == 0L).map(_._2._2).fold(0L)(_ + _)
-      // == (rank * w) div sumw, without the rank-sized product
-      val contribs = e.join(state.filter(_._2._1 > 0L))
-        .map { case (_, ((dst, w), (sw, rank))) =>
-          (dst, rank / sw * w + rank % sw * w / sw)
+    GraphLoop.run { loop =>
+      val (e, part) = loop.edges(eRdd)(identity)
+      val sumw = e.mapValues(_._2).reduceByKey(part, (a: Long, b: Long) => a + b)
+      // (id, sumw) co-partitioned with the edges — persisted: the seed
+      // state derives from it and the count below materializes it
+      val base = loop.persist(vRdd.map(id => (id, ())).partitionBy(part)
+        .leftOuterJoin(sumw, part)
+        .mapValues { case (_, sw) => sw.getOrElse(0L) })
+      val n = base.count()
+      if (n == 0) spark.createDataset(sc.emptyRDD[(Long, Long)]).toDF("id", "rank")
+      else {
+        // worst-case overflow bound for EVERY variant: total mass ≈
+        // n·scale and a single vertex can in principle receive all of
+        // it, so the 85× damping product needs 100·n·scale < 2⁶³.
+        // Enforced here (not just documented) so a too-large graph
+        // fails loudly instead of silently wrapping ranks; drop `scale`
+        // to trade precision for size.
+        require(n <= Long.MaxValue / 100L / scale,
+          s"PageRank: n*scale = $n*$scale would overflow the 85x damping " +
+            "product in the worst case - use a smaller scale")
+        // state: (id, (sumw, rank)), partitioning preserved from base
+        var prev: RDD[_] = base
+        var state = base
+          .mapPartitions(_.map { case (id, sw) => (id, (sw, initRank(n, id))) },
+            preservesPartitioning = true)
+        for (_ <- 1 to iters) {
+          // dangling mass: one exact long fold, the round's one action.
+          // It materializes `state`, after which the state it was built
+          // from can go
+          val dang = loop.advance(state, prev)(
+            _.filter(_._2._1 == 0L).map(_._2._2).fold(0L)(_ + _))
+          // == (rank * w) div sumw, without the rank-sized product
+          val contribs = e.join(state.filter(_._2._1 > 0L))
+            .map { case (_, ((dst, w), (sw, rank))) =>
+              (dst, rank / sw * w + rank % sw * w / sw)
+            }
+            .reduceByKey(part, (a: Long, b: Long) => a + b)
+          prev = state
+          state = state.leftOuterJoin(contribs, part)
+            .mapPartitions(_.map { case (id, ((sw, _), in)) =>
+              val mass = in.getOrElse(0L) + dangShare(n, dang, id)
+              (id, (sw, baseTerm(n, id) + 85L * mass / 100L))
+            }, preservesPartitioning = true)
         }
-        .reduceByKey(part, (a: Long, b: Long) => a + b)
-      val next = state.leftOuterJoin(contribs, part)
-        .mapPartitions(_.map { case (id, ((sw, _), in)) =>
-          val mass = in.getOrElse(0L) + dangShare(n, dang, id)
-          (id, (sw, baseTerm(n, id) + 85L * mass / 100L))
-        }, preservesPartitioning = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      state.unpersist(false)
-      state = next
+        // the last round runs in the caller's action: it reads the
+        // edges and the state before it, and persists its own result
+        // (an ordered read computes the result twice)
+        loop.retain(e, prev, loop.persist(state))
+        state.map { case (id, (_, rank)) => (id, rank) }.toDF("id", "rank")
+      }
     }
-    state.map { case (id, (_, rank)) => (id, rank) }.toDF("id", "rank")
   }
 }

@@ -19,7 +19,7 @@ object Traversals {
     *
     * Each round expands only the NEW frontier (dist == round−1) through
     * one equi-join — textbook distributed BFS, O(maxHops) shuffles,
-    * lineage cut per round.
+    * each round's frontier persisted and materialized by its count.
     */
   def bfsHops(vertices: DataFrame, edges: DataFrame, source: Long,
               maxHops: Int): DataFrame = {
@@ -42,59 +42,35 @@ object Traversals {
       .select(col("src").cast("long"), col("dst").cast("long"))
       .na.drop()
       .as[(Long, Long)].rdd
-    val nE = eRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val e = eRdd.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var frontier = sc.parallelize(Seq((source, 0L)), 1).partitionBy(part)
-    var reached = frontier
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var h = 1
-    var drained = false
-    while (h <= maxHops && !drained) {
-      val hh = h.toLong
-      val next = e.join(frontier)
-        .map { case (_, (dst, _)) => (dst, hh) }
-        .reduceByKey(part, (a: Long, b: Long) => a)   // distinct dsts
-        .subtractByKey(reached, part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // ONE action materializes the round and decides the early drain
-      drained = next.count() == 0L
-      if (!drained) {
-        // union of co-partitioned per-round frontiers: key sets are
-        // disjoint by construction (the subtract), like the DF unionAll
-        val merged = reached.union(next)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        frontier = next
-        reached = merged
+    GraphLoop.run { loop =>
+      val (e, part) = loop.edges(eRdd)(identity)
+      // the reached set is the union of the per-round frontiers: their
+      // key sets are disjoint by construction (the subtract), and a
+      // union of co-partitioned RDDs keeps `part`
+      val frontiers = scala.collection.mutable.ArrayBuffer(
+        loop.persist(sc.parallelize(Seq((source, 0L)), 1).partitionBy(part)))
+      var drained = false
+      while (loop.rounds < maxHops && !drained) {
+        val hop = loop.rounds + 1L
+        val next = e.join(frontiers.last)
+          .map { case (_, (dst, _)) => (dst, hop) }
+          .reduceByKey(part, (a: Long, b: Long) => a)   // distinct dsts
+          .subtractByKey(sc.union(frontiers.toSeq), part)
+        // ONE action materializes the round and decides the early drain
+        drained = loop.advance(next)(_.count() == 0L)
+        if (!drained) frontiers += next
       }
-      h += 1
+      loop.retain(frontiers.toSeq: _*)
+      vertices
+        .select(col(vertices.columns(0)).cast("long")).distinct()
+        .as[Long].rdd
+        .map(id => (id, ()))
+        .leftOuterJoin(sc.union(frontiers.toSeq))
+        .map { case (id, (_, d)) => (id, d) }
+        .toDF("id", "dist")
     }
-    val out = vertices
-      .select(col(vertices.columns(0)).cast("long")).distinct()
-      .as[Long].rdd
-      .map(id => (id, ()))
-      .leftOuterJoin(reached)
-      .map { case (id, (_, d)) => (id, d) }
-      .toDF("id", "dist")
-    e.unpersist(false)
-    out
   }
 
-  /** Per-vertex triangle count over an UNDIRECTED graph given as
-    * canonical pairs (id_a < id_b). Triangles (a < b < c) come from the
-    * standard two-step equi-self-join on the ordered edge list — the
-    * ordering makes each triangle appear exactly once, and every join
-    * is on edge endpoints (shuffle-partitionable; the heaviest key is
-    * the highest-degree vertex, AQE-skew territory, never a cross
-    * join).
-    *
-    * The canonical pair set is cached (three self-join references read
-    * it) and the result is lazy, so the caller owns eviction after the
-    * query runs (see Dedup's cache-lifecycle note).
-    */
   /** Bounded k-core peeling: `rounds` synchronous rounds of "drop every
     * vertex whose degree within the surviving set is < k". The k-core
     * is the fixpoint; a FIXED round count keeps the operator
@@ -127,19 +103,13 @@ object Traversals {
     // the final degree is re-counted within the last surviving set.
     val spark = vertices.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val pRdd = pairs.toDF("id_a", "id_b")
       .select(col("id_a").cast("long"), col("id_b").cast("long"))
       .na.drop() // null endpoints matched nothing in the DF joins
       .distinct()
       .as[(Long, Long)].rdd
-    val nE = pRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val adj = pRdd.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (adj, part) = GraphLoop.edges(pRdd)(
+      _.flatMap { case (a, b) => Iterator((a, b), (b, a)) })
     val verts = vertices
       .select(col(vertices.columns(0)).cast("long")).distinct()
       .as[Long].rdd
@@ -153,6 +123,8 @@ object Traversals {
         .join(alive, part) // dst alive (shuffles the remapped edges only)
         .map { case (_, (src, _)) => (src, 1L) }
         .reduceByKey(part, _ + _)
+    // shared edge step only: the rounds are one lazy chain with no
+    // action of their own, run by the caller's action
     var alive = verts
     for (_ <- 1 to rounds) {
       alive = degreesWithin(alive)
@@ -218,9 +190,9 @@ object Traversals {
     * Each round relaxes only vertices with a finite distance through
     * ONE edge equi-join + a min aggregate on the destination key, then
     * folds into the running distance table with a left join — O(rounds)
-    * shuffles, all hash-partitioned on vertex ids; distances
-    * localCheckpoint per round (iterative-lineage rule). The edge list
-    * materializes once and is read by every round.
+    * shuffles, all hash-partitioned on vertex ids; each round's
+    * distances are persisted and materialized by one count. The edge
+    * list materializes once and is read by every round.
     */
   def ssspBounded(vertices: DataFrame, edges: DataFrame, source: Long,
                   rounds: Int): DataFrame = {
@@ -237,48 +209,38 @@ object Traversals {
     // forms (the DF join/arithmetic dropped them silently).
     val spark = vertices.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val eRdd = edges.toDF("src", "dst", "w")
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("w").cast("long"))
       .na.drop()
       .as[(Long, Long, Long)].rdd
       .map { case (s, d, w) => (s, (d, w)) }
-    val nE = eRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val e = eRdd.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = vertices
-      .select(col(vertices.columns(0)).cast("long")).distinct()
-      .as[Long].rdd
-      .map(id => (id, if (id == source) 0L else -1L))
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to rounds) {
-      val relax = e.join(dist.filter(_._2 >= 0L))
-        .map { case (_, ((d, w), sd)) => (d, sd + w) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      val next = dist.leftOuterJoin(relax, part)
-        .mapPartitions(_.map { case (id, (cur, nd)) =>
-          (id, nd match {
-            case Some(n) => if (cur < 0L) n else math.min(cur, n)
-            case None => cur
-          })
-        }, preservesPartitioning = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize before dropping the parent's blocks (no recompute
-      // cascade — the HITS loop discipline)
-      next.count()
-      dist.unpersist(false)
-      dist = next
+    GraphLoop.run { loop =>
+      val (e, part) = loop.edges(eRdd)(identity)
+      var dist = loop.persist(vertices
+        .select(col(vertices.columns(0)).cast("long")).distinct()
+        .as[Long].rdd
+        .map(id => (id, if (id == source) 0L else -1L))
+        .partitionBy(part))
+      for (_ <- 1 to rounds) {
+        val relax = e.join(dist.filter(_._2 >= 0L))
+          .map { case (_, ((d, w), sd)) => (d, sd + w) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        val next = dist.leftOuterJoin(relax, part)
+          .mapPartitions(_.map { case (id, (cur, nd)) =>
+            (id, nd match {
+              case Some(n) => if (cur < 0L) n else math.min(cur, n)
+              case None => cur
+            })
+          }, preservesPartitioning = true)
+        loop.advance(next, dist)(_.count())
+        dist = next
+      }
+      loop.retain(dist)
+      dist
+        .map { case (id, d) => (id, if (d < 0L) None else Some(d)) }
+        .toDF("id", "dist")
     }
-    val out = dist
-      .map { case (id, d) => (id, if (d < 0L) None else Some(d)) }
-      .toDF("id", "dist")
-    e.unpersist(false)
-    out
   }
 
   /** Deterministic random walks (the DeepWalk/node2vec corpus
@@ -317,7 +279,6 @@ object Traversals {
     // column parsed — packed above the id, integer min, pmod back out.
     val spark = vertices.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val eRdd = edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long"))
       .na.drop()
@@ -329,12 +290,7 @@ object Traversals {
             s"deterministicWalks requires 0 <= id < 2^$idBits")
         (src, dst)
       }
-    val nE = eRdd.count()
-    val parts = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      2 * nE / 50000L + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val e = eRdd.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (e, part) = GraphLoop.edges(eRdd)(identity)
     var cur = vertices
       .select(col(vertices.columns(0)).cast("long")).distinct()
       .as[Long].rdd
@@ -362,9 +318,21 @@ object Traversals {
       cur = stepped
       perStep += cur.map { case (w, n) => (w, i, n) }
     }
-    sc.union(perStep.toSeq).toDF("walk_id", "step", "node")
+    spark.sparkContext.union(perStep.toSeq).toDF("walk_id", "step", "node")
   }
 
+  /** Per-vertex triangle count over an UNDIRECTED graph given as
+    * canonical pairs (id_a < id_b). Triangles (a < b < c) come from the
+    * standard two-step equi-self-join on the ordered edge list — the
+    * ordering makes each triangle appear exactly once, and every join
+    * is on edge endpoints (shuffle-partitionable; the heaviest key is
+    * the highest-degree vertex, AQE-skew territory, never a cross
+    * join).
+    *
+    * The canonical pair set is cached (three self-join references read
+    * it) and the result is lazy, so the caller owns eviction after the
+    * query runs (see Dedup's cache-lifecycle note).
+    */
   def triangleCounts(vertices: DataFrame, pairs: DataFrame): DataFrame = {
     // non-canonical pairs would silently undercount (the a<b<c join
     // never matches them); duplicates would multi-count — guard + dedup

@@ -80,20 +80,29 @@ class TagAndGraphSpec extends SparkSpec {
     assert(links(replaced, 2) == Seq(1L, 3L), "untouched nodes keep links")
   }
 
-  test("connected components: GraphX and DataFrame implementations agree") {
+  test("connected components: min-id labels, singletons included") {
     import spark.implicits._
     val verts = (1L to 7L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val gx = Components.connectedComponentsGraphX(verts, edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val df = Components.connectedComponentsDF(verts, edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fast = Components.connectedComponentsFast(verts, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val expected = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 5L), (6L, 5L), (7L, 7L))
-    assert(gx == expected, "min-id labels, singletons included")
-    assert(df == expected)
-    assert(fast == expected)
+    assert(fast == expected, "min-id labels, singletons included")
+  }
+
+  test("connected components: hitting maxIter unconverged throws") {
+    import spark.implicits._
+    // path 4-3-2-1-5-6: the fixed point needs a no-change round, so one
+    // round can never prove it
+    val verts = (1L to 6L).toDF("id")
+    val edges = Seq((4L, 3L), (3L, 2L), (2L, 1L), (1L, 5L), (5L, 6L))
+      .toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException](
+      Components.connectedComponentsFast(verts, edges, maxIter = 1))
+    assert(err.getMessage.contains("1 rounds"), err.getMessage)
+    val labels = Components.connectedComponentsFast(verts, edges)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(labels == (1L to 6L).map(id => (id, 1L)), "one component, min id 1")
   }
 
   test("componentSizeHistogram: family sizes roll up with member totals") {
@@ -148,6 +157,21 @@ class TagAndGraphSpec extends SparkSpec {
     // empty graph: empty result, not a divide-by-zero
     assert(graft.graph.PageRank.run(vertices.filter(col("id") < 0),
       edges.filter(col("src") < 0), iters = 1).count() == 0)
+  }
+
+  test("PageRank: a throwing loop releases every RDD it persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val firstId = sc.emptyRDD[Int].id
+    val vertices = Seq(1L, 2L).toDF("id")
+    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    // 100·n·scale overflows for n = 2: the require trips after the
+    // edges and the vertex base are persisted
+    intercept[IllegalArgumentException](
+      graft.graph.PageRank.run(vertices, edges, iters = 2,
+        scale = Long.MaxValue / 100))
+    val leaked = sc.getPersistentRDDs.keys.filter(_ > firstId)
+    assert(leaked.isEmpty, s"RDDs still persisted after the throw: $leaked")
   }
 
   test("personalized PageRank: teleport mass returns to the source only") {
