@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.{FileStore, WdbIO, WhisperState}
 import graft.model.{Node, NodeCodec}
@@ -58,13 +58,18 @@ class WhisperDB(val spark: SparkSession, val state: WhisperState) {
   // ============================ C1/C2: lookups ==========================
 
   /** C1: point lookup (GraphDB.cpp:30-38); None when missing. */
-  def find(id: Long): Option[DataFrame] = {
-    val df = nodes.filter(col("id") === id)
-    if (df.limit(1).isEmpty) None else Some(df)
-  }
+  def find(id: Long): Option[DataFrame] =
+    if (exists(id)) Some(nodes.filter(col("id") === id)) else None
 
-  /** C2: existence (GraphDB.cpp:40-43). */
-  def exists(id: Long): Boolean = !nodes.filter(col("id") === id).limit(1).isEmpty
+  /** C1 as a row: the node's row, None when missing. One
+    * collect, so one Spark job; a `limit(1)` probe would instead scan
+    * the partitions in growing batches, a job per batch, until a match.
+    */
+  def row(id: Long): Option[Row] = nodes.filter(col("id") === id).collect().headOption
+
+  /** C2: existence (GraphDB.cpp:40-43); one Spark job, as `row`. */
+  def exists(id: Long): Boolean =
+    nodes.filter(col("id") === id).select("id").collect().nonEmpty
 
   // ============================ C3-C7: mutations ========================
 

@@ -2,6 +2,8 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -125,22 +127,32 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
   private def countNodes(req: Req): Resp =
     ok(s"""{"status":"success","count":${api.countNodes(filtersFrom(req.query))}}""")
 
-  private def withNodeId(req: Req)(f: Long => Resp): Resp = {
-    val idStr = req.params("id")
-    idStr.toLongOption match {
-      case Some(id) if api.db.exists(id) => f(id)
-      case _ => notFound(s"Node not found: $idStr")
-    }
-  }
+  /** The 404 of every `:id` route, echoing the id as sent. */
+  private def nodeNotFound(req: Req): Resp =
+    notFound(s"Node not found: ${req.params("id")}")
 
-  private def getNode(req: Req): Resp = withNodeId(req) { id =>
-    api.getNode(id) match {
-      case ApiOk((nodeDf, filesDf)) =>
-        val node = Json.nodeJson(nodeDf.collect()(0))
-        val files = Json.arr(filesDf.collect().map(r => Json.str(r.getString(0))))
-        ok(s"""{"status":"success","node":$node,"files":$files}""")
-      case ApiError(_, m) => notFound(m)
+  /** Runs `f` on the node as read (existence check and row are one
+    * collect from one snapshot); a missing or non-numeric id is the 404.
+    */
+  private def withNode(req: Req)(f: NodeRead => Resp): Resp =
+    req.params("id").toLongOption.flatMap(api.readNode) match {
+      case Some(n) => f(n)
+      case None => nodeNotFound(req)
     }
+
+  /** A write on a node that may be missing: its locked existence check
+    * decides the 404; any other facade error is a 500.
+    */
+  private def writeResult[A](req: Req, r: ApiResult[A])(f: A => Resp): Resp =
+    r match {
+      case ApiOk(a) => f(a)
+      case ApiError(404, _) => nodeNotFound(req)
+      case ApiError(_, m) => serverError(m)
+    }
+
+  private def getNode(req: Req): Resp = withNode(req) { n =>
+    val files = Json.arr(n.db.getNodeFiles(n.id).collect().map(r => Json.str(r.getString(0))))
+    ok(s"""{"status":"success","node":${Json.nodeJson(n.row)},"files":$files}""")
   }
 
   /** POST /api/nodes — UploadHandler.handleUpload replay: metadata from
@@ -212,21 +224,28 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
     }
   }
 
-  private def updateNode(req: Req): Resp = withNodeId(req) { id =>
-    if (req.parts.isEmpty) return badRequest("No data received")
+  /** PUT: the facade's locked check decides the 404, and the response
+    * row is read from the snapshot this write produced. A bad body is a
+    * 400 only for a node that exists; for a missing one the 404 wins.
+    */
+  private def updateNode(req: Req): Resp = req.params("id").toLongOption match {
+    case None => nodeNotFound(req)
+    case Some(id) => patchBody(req) match {
+      case Left(bad) => if (api.db.exists(id)) bad else nodeNotFound(req)
+      case Right(patch) => writeResult(req, api.patchNode(id, patch)) { db =>
+        val node = Json.nodeJson(db.row(id).get)
+        ok(s"""{"status":"success","message":"Node updated","node":$node}""")
+      }
+    }
+  }
+
+  private def patchBody(req: Req): Either[Resp, NodePatch] = {
+    if (req.parts.isEmpty) return Left(badRequest("No data received"))
     val raw = req.parts.head.dataAsString
     val jsonStart = raw.indexOf('{')
-    if (jsonStart < 0) return badRequest("Invalid JSON body")
-    val j = try mapper.readTree(raw.substring(jsonStart)) catch {
-      case e: Exception => return badRequest(s"Invalid JSON: ${e.getMessage}")
-    }
-    val patch = patchFrom(j) // id is never read — the reference strips it
-    api.updateNode(id, patch) match {
-      case ApiOk(_) =>
-        val node = Json.nodeJson(api.db.find(id).get.collect()(0))
-        ok(s"""{"status":"success","message":"Node updated","node":$node}""")
-      case ApiError(_, m) => serverError(m)
-    }
+    if (jsonStart < 0) return Left(badRequest("Invalid JSON body"))
+    try Right(patchFrom(mapper.readTree(raw.substring(jsonStart))))
+    catch { case e: Exception => Left(badRequest(s"Invalid JSON: ${e.getMessage}")) }
   }
 
   /** PUT-lenient patch decode (SURVEY §1.2 asymmetry): comma-string
@@ -251,24 +270,24 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
       embedding = emb)
   }
 
-  private def deleteNode(req: Req): Resp = withNodeId(req) { id =>
-    api.deleteNode(id) match {
-      case ApiOk(_) => ok(s"""{"status":"success","message":"Node deleted","deletedId":${
+  private def deleteNode(req: Req): Resp = req.params("id").toLongOption match {
+    case None => nodeNotFound(req)
+    case Some(id) => writeResult(req, api.deleteNode(id)) { _ =>
+      ok(s"""{"status":"success","message":"Node deleted","deletedId":${
         Json.str(req.params("id"))}}""")
-      case ApiError(_, m) => serverError(m)
     }
   }
 
-  private def getNodeFiles(req: Req): Resp = withNodeId(req) { id =>
-    val files = Json.arr(api.listFiles(id).collect().map(r => Json.str(r.getString(0))))
+  private def getNodeFiles(req: Req): Resp = withNode(req) { n =>
+    val files = Json.arr(n.db.getNodeFiles(n.id).collect().map(r => Json.str(r.getString(0))))
     ok(s"""{"status":"success","nodeId":${Json.str(req.params("id"))},"files":$files}""")
   }
 
-  private def addFileToNode(req: Req): Resp = withNodeId(req) { id =>
+  private def addFileToNode(req: Req): Resp = withNode(req) { n =>
     val files = req.parts.filter(_.isFile)
     if (files.isEmpty) badRequest("No files provided")
     else {
-      val results = files.map(f => api.attachFile(id, f.filename, f.data))
+      val results = files.map(f => api.attachFile(n.id, f.filename, f.data))
       results.collectFirst { case ApiError(code, m) => (code, m) } match {
         case Some((500, m)) => serverError(m)
         case Some((_, m)) => badRequest(m)
@@ -321,40 +340,34 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
     }
   }
 
-  private def generateEmbedding(req: Req): Resp = withNodeId(req) { id =>
-    api.generateEmbedding(id) match {
+  private def generateEmbedding(req: Req): Resp = withNode(req) { n =>
+    api.generateEmbedding(n.id) match {
       case ApiOk(_) =>
-        ok(s"""{"status":"success","message":"Embedding generated","nodeId":$id}""")
+        ok(s"""{"status":"success","message":"Embedding generated","nodeId":${n.id}}""")
       case ApiError(_, m) => serverError(m)
     }
   }
 
-  private def similarNodes(req: Req): Resp = withNodeId(req) { id =>
-    val row = api.db.find(id).get.collect()(0)
+  private def similarNodes(req: Req): Resp = withNode(req) { n =>
     // reference hasEmbedding() is false for absent AND empty vectors
-    val hasEmb = !row.isNullAt(10) && row.getSeq[Float](10).nonEmpty
+    val hasEmb = !n.row.isNullAt(10) && n.row.getSeq[Float](10).nonEmpty
     if (!hasEmb)
       return badRequest("Node has no embedding. Generate embedding first.")
     // invalid ?limit is IGNORED here (reference catches and keeps the
     // default, main.cpp:533-537) — unlike /api/nodes where it is a 400
     val limit = req.query.get("limit").flatMap(stoi).getOrElse(10)
-    api.similarNodes(id, limit) match {
-      case ApiOk(df) =>
-        val rows = df.collect()
-        val sims = Json.arr(rows.map { r =>
-          val node = Json.nodeJson(r)
-          val sim = r.getDouble(r.fieldIndex("sim"))
-          node.dropRight(1) + s""", "similarity": $sim}"""
-        })
-        ok(s"""{"status":"success","nodeId":${Json.str(req.params("id"))},"similarNodes":$sims}""")
-      case ApiError(_, m) => serverError(m)
-    }
+    val sims = Json.arr(api.similarTo(n, limit).collect().map { r =>
+      val node = Json.nodeJson(r)
+      val sim = r.getDouble(r.fieldIndex("sim"))
+      node.dropRight(1) + s""", "similarity": $sim}"""
+    })
+    ok(s"""{"status":"success","nodeId":${Json.str(req.params("id"))},"similarNodes":$sims}""")
   }
 
-  private def generateTags(req: Req): Resp = withNodeId(req) { id =>
-    api.generateTags(id) match {
+  private def generateTags(req: Req): Resp = withNode(req) { n =>
+    api.generateTags(n.id) match {
       case ApiOk(r) =>
-        ok(s"""{"status":"success","nodeId":$id,"tags":${
+        ok(s"""{"status":"success","nodeId":${n.id},"tags":${
           Json.arr(r.tags.map(Json.str))},"newTagsAdded":${
           Json.arr(r.newTagsAdded.map(Json.str))},"linkedNodes":${
           Json.arr(r.linkedNodes.map(_.toString))}}""")
@@ -507,10 +520,20 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
     b.toString
   }
 
+  /** The handler pool; `stop` shuts it down, since `HttpServer.stop`
+    * leaves an executor it was given running (and its non-daemon threads
+    * would keep the JVM alive).
+    */
+  private val pool: ExecutorService = {
+    val n = new AtomicInteger(0)
+    Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"${HttpApiServer.HandlerThreadPrefix}${n.incrementAndGet()}"))
+  }
+
   private val server: HttpServer = {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
     s.createContext("/", (exchange: HttpExchange) => handle(exchange))
-    s.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    s.setExecutor(pool)
     s
   }
 
@@ -541,7 +564,15 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
   /** Start listening; returns the bound port (useful with bindPort=0). */
   def start(): Int = { server.start(); server.getAddress.getPort }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop listening and release the handler threads; a request still
+    * running completes first.
+    */
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
+}
+
+object HttpApiServer {
+  /** Name prefix of the handler threads. */
+  val HandlerThreadPrefix = "http-api-handler-"
 }
 
 /** Minimal JSON writers shared by the HTTP layer — same escaping and

@@ -1,6 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 import graft.{NodeFilters, NodePatch, WhisperDB}
 import graft.enrich.{ClusteringReport, EnrichService, TaggingReport}
 import graft.model.{Node, NodeCodec}
@@ -42,14 +43,32 @@ object Validation {
   }
 }
 
+/** A node as one request reads it: the snapshot current when the
+  * request began, and the node's row in that snapshot.
+  */
+final case class NodeRead(db: WhisperDB, row: Row) {
+  def id: Long = row.getLong(0)
+}
+
 /** The reference's REST surface as a typed Scala facade — one method per
   * route (reference: src/main.cpp, route table in SURVEY §2.7). Holds a
   * mutable current-snapshot reference (the functional WhisperDB
   * underneath); `checkpoint*` persists on demand.
+  *
+  * The served snapshot is memory-resident, as the reference's GraphDB
+  * holds its nodes in one in-process map: construction pins the initial
+  * tables in Spark's in-memory columnar cache and materializes them, and
+  * every later snapshot (a write's union, patch or filter over them)
+  * scans that cache through Catalyst's cache substitution instead of
+  * re-opening the source files. The pin uses `cache()`'s MEMORY_AND_DISK
+  * level: an evicted block spills to local disk rather than being
+  * recomputed from a source that may have changed or gone since.
   */
 class WhisperApi(initial: WhisperDB,
                  enrich: EnrichService,
                  store: Option[graft.io.FileStore] = None) {
+
+  Seq(initial.nodes, initial.nodeFiles).foreach(_.cache().count())
 
   @volatile private var current: WhisperDB = initial
   def db: WhisperDB = current
@@ -81,18 +100,29 @@ class WhisperApi(initial: WhisperDB,
   def countNodes(filters: NodeFilters = NodeFilters()): Long =
     current.countNodes(filters)
 
-  /** GET /api/nodes/:id (C1 + C8: node + files). Reads capture the
-    * snapshot ONCE — a second `current` read racing a delete would
-    * answer from two different states (node from one, files from
-    * another), a response no single state ever had.
+  /** Reads node `id` once: captures the snapshot ONCE and collects the
+    * node's row from it (one Spark job). A second `current` read racing
+    * a delete would answer from two different states (node from one,
+    * files from another), a response no single state ever had. None when
+    * the node is missing.
     */
-  def getNode(id: Long): ApiResult[(DataFrame, DataFrame)] = {
+  def readNode(id: Long): Option[NodeRead] = {
     val db = current
-    db.find(id) match {
-      case Some(df) => ApiOk((df, db.getNodeFiles(id)))
-      case None => ApiError(404, s"Node $id not found")
-    }
+    db.row(id).map(NodeRead(db, _))
   }
+
+  /** GET /api/nodes/:id (C1 + C8: node + files); the node frame holds
+    * the row `readNode` already collected.
+    */
+  def getNode(id: Long): ApiResult[(DataFrame, DataFrame)] =
+    readNode(id) match {
+      case Some(n) =>
+        ApiOk((n.db.spark.createDataFrame(java.util.List.of(n.row), n.db.nodes.schema),
+          n.db.getNodeFiles(id)))
+      case None => notFound(id)
+    }
+
+  private def notFound(id: Long) = ApiError(404, s"Node $id not found")
 
   /** POST /api/nodes (C9/C10: validate + default date + insert).
     * `now` is injectable for determinism (the reference stamps wall
@@ -112,9 +142,22 @@ class WhisperApi(initial: WhisperDB,
     * the reference API, main.cpp:275).
     */
   def updateNode(id: Long, patch: NodePatch): ApiResult[Long] =
+    patchNode(id, patch) match {
+      case ApiOk(_) => ApiOk(id)
+      case e: ApiError => e
+    }
+
+  /** `updateNode` returning the snapshot the write produced, so the HTTP
+    * route answers with the node as this write left it even when a later
+    * write has already replaced `current`.
+    */
+  private[api] def patchNode(id: Long, patch: NodePatch): ApiResult[WhisperDB] =
     mutate { db =>
-      if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
-      else Right((db.updateNode(id, patch), id))
+      if (!db.exists(id)) Left(notFound(id))
+      else {
+        val next = db.updateNode(id, patch)
+        Right((next, next))
+      }
     }
 
   /** DELETE /api/nodes/:id (C5); cascades blob deletes through the
@@ -122,7 +165,7 @@ class WhisperApi(initial: WhisperDB,
     */
   def deleteNode(id: Long): ApiResult[Long] =
     mutate { db =>
-      if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
+      if (!db.exists(id)) Left(notFound(id))
       else Right((store match {
         case Some(st) => db.deleteNode(id, st)
         case None => db.deleteNode(id)
@@ -137,7 +180,7 @@ class WhisperApi(initial: WhisperDB,
     */
   def attachFile(id: Long, path: String): ApiResult[String] =
     mutate { db =>
-      if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
+      if (!db.exists(id)) Left(notFound(id))
       else Right((db.addFileToNode(id, path), path))
     }
 
@@ -152,7 +195,7 @@ class WhisperApi(initial: WhisperDB,
       case None => ApiError(500, "No file store configured")
       case Some(st) =>
         mutate { db =>
-          if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
+          if (!db.exists(id)) Left(notFound(id))
           else Right(db.addFileToNode(id, filename, content, st))
         }
     }
@@ -162,7 +205,7 @@ class WhisperApi(initial: WhisperDB,
     */
   def detachFile(id: Long, path: String): ApiResult[String] =
     mutate { db =>
-      if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
+      if (!db.exists(id)) Left(notFound(id))
       else Right((store match {
         case Some(st) => db.removeFileFromNode(id, path, st)
         case None => db.removeFileFromNode(id, path)
@@ -170,20 +213,30 @@ class WhisperApi(initial: WhisperDB,
     }
 
   /** GET /api/nodes/:id/similar?limit (V5, default k=10). Snapshot
-    * captured once — see getNode.
+    * captured once — see readNode.
     */
-  def similarNodes(id: Long, limit: Int = 10): ApiResult[DataFrame] = {
-    val db = current
-    if (!db.exists(id)) ApiError(404, s"Node $id not found")
-    else ApiOk(SimilarityOps.topKSimilar(
-      db.nodes.filter(org.apache.spark.sql.functions.col("embedding").isNotNull),
-      "id", "embedding", id, limit))
+  def similarNodes(id: Long, limit: Int = 10): ApiResult[DataFrame] =
+    readNode(id) match {
+      case Some(n) => ApiOk(similarTo(n, limit))
+      case None => notFound(id)
+    }
+
+  /** V5 for a node already read: ranks the other embedded nodes of the
+    * same snapshot against the row's own vector. A node without an
+    * embedding has no neighbours (an empty frame).
+    */
+  def similarTo(n: NodeRead, limit: Int): DataFrame = {
+    val e = n.row.fieldIndex("embedding")
+    val vec = Option.unless(n.row.isNullAt(e))(n.row.getSeq[Float](e).toSeq)
+    SimilarityOps.topKSimilarTo(
+      n.db.nodes.filter(col("embedding").isNotNull && lit(vec.isDefined)),
+      "id", "embedding", n.id, vec.getOrElse(Seq.empty), limit)
   }
 
   /** POST /api/nodes/:id/embedding (E5). */
   def generateEmbedding(id: Long): ApiResult[Long] =
     mutate { db =>
-      if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
+      if (!db.exists(id)) Left(notFound(id))
       else {
         val (nodes2, _) = enrich.generateMissingEmbeddings(db.nodes)
         Right((db.withState(db.state.copy(nodes = nodes2)), id))
@@ -193,7 +246,7 @@ class WhisperApi(initial: WhisperDB,
   /** POST /api/nodes/:id/tags (E7). */
   def generateTags(id: Long): ApiResult[TaggingReport] =
     mutate { db =>
-      if (!db.exists(id)) Left(ApiError(404, s"Node $id not found"))
+      if (!db.exists(id)) Left(notFound(id))
       else Right(enrich.generateTagsForNode(db, id))
     }
 

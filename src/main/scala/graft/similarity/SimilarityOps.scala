@@ -24,7 +24,8 @@ case class LshBlocked(bands: Int = 3, bitsPerBand: Int = 4)
   *
   * Scale notes (100 TB):
   *  - `topKSimilar` broadcasts the single query row and compiles to a
-  *    scan + TakeOrderedAndProject — no shuffle, no full sort.
+  *    scan + TakeOrderedAndProject — no shuffle, no full sort;
+  *    `topKSimilarTo` takes a query vector already read as a literal.
   *  - `allPairs` is the exact O(n²) parity operator; at scale call
   *    `allPairsBlocked` (IVF-style candidate blocking) or MLlib's
   *    BucketedRandomProjectionLSH — both cut candidates before the
@@ -58,13 +59,25 @@ object SimilarityOps {
                   queryId: Long, k: Int = 10): DataFrame = {
     val q = emb.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__query_vec"))
-    emb.filter(col(idCol) =!= queryId)
+    topK(emb.filter(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("sim", sim6(col(vecCol), col("__query_vec")))
-      .drop("__query_vec")
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
+      .drop("__query_vec"), idCol, k)
   }
+
+  /** V5 against a query vector the caller already holds (the serving
+    * path has read the query row): the vector is a plan literal, so no
+    * query row is scanned or broadcast. Same scoring, self-exclusion and
+    * (sim desc, id asc) order as `topKSimilar`, hence the same rows.
+    */
+  def topKSimilarTo(emb: DataFrame, idCol: String, vecCol: String,
+                    queryId: Long, queryVec: Seq[Float], k: Int = 10): DataFrame =
+    topK(emb.filter(col(idCol) =!= queryId)
+      .withColumn("sim", sim6(col(vecCol), typedLit(queryVec))), idCol, k)
+
+  /** The ordering tail both V5 paths share: (sim desc, id asc), first k. */
+  private def topK(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    scored.orderBy(col("sim").desc, col(idCol).asc).limit(k)
 
   /** V2: exact all-pairs similarity join, id_a < id_b, sim >= threshold
     * (reference Clustering.cpp:29-53, default threshold 0.75).

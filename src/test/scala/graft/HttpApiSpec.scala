@@ -2,11 +2,20 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 import graft.api.{HttpApiServer, Multipart, WhisperApi}
 import graft.enrich.{EnrichService, MockEmbedder, MockTagger}
+import graft.io.{WdbIO, WhisperState}
+import graft.model.Node
+import graft.similarity.SimilarityOps
 
 /** Real-socket end-to-end test of the HTTP layer: replays the
   * reference's CRUD autotest script (CURL_TESTS.md:390-445) against a
@@ -24,11 +33,37 @@ class HttpApiSpec extends SparkSpec {
                         (f: (String, WhisperApi) => Unit): Unit = {
     val api = new WhisperApi(WhisperDB.empty(spark),
       new EnrichService(new MockEmbedder(8), new MockTagger), store)
+    serve(api)(f(_, api))
+  }
+
+  private def serve(api: WhisperApi)(f: String => Unit): Unit = {
     val server = new HttpApiServer(api)
     val port = server.start()
-    try f(s"http://127.0.0.1:$port", api)
+    try f(s"http://127.0.0.1:$port")
     finally server.stop()
   }
+
+  /** A native snapshot on disk, as a deployment loads it: 40 nodes in
+    * four `course=` directories, every third without an embedding, and
+    * files attached to nodes 1 and 2.
+    */
+  private def nativeSnapshot(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-http-native").toString
+    val nodes = (1 to 40).map { i =>
+      Node(id = i, title = s"Doc $i", course = 100 + i % 4, subject = "S",
+        author = s"A${i % 5}", date = f"2024-01-${1 + i % 28}%02d 00:00:00",
+        tags = Seq(s"t${i % 3}"),
+        embedding = if (i % 3 == 0) None else Some(Seq(1f + i % 7, (i % 5).toFloat, 1f)))
+    }.toDS().toDF()
+    val files = Seq((1L, "2024/01/01/a.txt"), (2L, "2024/01/01/b.txt")).toDF("node_id", "path")
+    WdbIO.writeNative(WhisperState(nodes, files, Seq("t0", "t1", "t2"), 40L), dir)
+    dir
+  }
+
+  private def nativeApi(dir: String): WhisperApi =
+    new WhisperApi(WhisperDB.loadNative(spark, dir),
+      new EnrichService(new MockEmbedder(8), new MockTagger))
 
   private def send(method: String, url: String, body: Array[Byte] = Array.empty,
                    contentType: String = "application/json"): (Int, String) = {
@@ -419,5 +454,124 @@ class HttpApiSpec extends SparkSpec {
         }
       } finally pool.shutdownNow()
     }
+  }
+
+  test("the served snapshot is memory-resident: get, list and similar " +
+       "answer the same after its files are deleted") {
+    val dir = nativeSnapshot()
+    serve(nativeApi(dir)) { base =>
+      val urls = Seq(s"$base/api/nodes/5", s"$base/api/nodes?sort=title&order=desc&limit=7",
+        s"$base/api/nodes/5/similar?limit=4")
+      val before = urls.map(send("GET", _))
+      assert(before.forall(_._1 == 200), before)
+      val root = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+      assert(!java.nio.file.Files.exists(root))
+      assert(urls.map(send("GET", _)) == before)
+    }
+  }
+
+  test(":id routes on a loaded snapshot: similar ranks as topKSimilar; " +
+       "404 for a missing or non-numeric id wins over a bad body; 400 " +
+       "without an embedding") {
+    val api = nativeApi(nativeSnapshot())
+    serve(api) { base =>
+      val (ss, sb) = send("GET", s"$base/api/nodes/1/similar?limit=5")
+      assert(ss == 200, sb)
+      val sims = mapper.readTree(sb).get("similarNodes")
+      val got = (0 until sims.size).map(i =>
+        (sims.get(i).get("id").asLong, sims.get(i).get("similarity").asDouble))
+      val expected = SimilarityOps.topKSimilar(
+        api.db.nodes.filter(col("embedding").isNotNull), "id", "embedding", 1L, 5)
+        .select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == expected)
+
+      val (ns, nb) = send("GET", s"$base/api/nodes/3/similar")
+      assert(ns == 400 &&
+        jsonField(nb, "message") == "Node has no embedding. Generate embedding first.")
+      for (id <- Seq("999", "abc")) {
+        val notFound = s"Node not found: $id"
+        for ((method, path) <- Seq("GET" -> s"/api/nodes/$id", "GET" -> s"/api/nodes/$id/similar",
+                                   "PUT" -> s"/api/nodes/$id", "DELETE" -> s"/api/nodes/$id")) {
+          val (st, b) = send(method, base + path, "not json".getBytes)
+          assert(st == 404 && jsonField(b, "message") == notFound, s"$method $path: $st $b")
+        }
+      }
+      val (bs, bb) = send("PUT", s"$base/api/nodes/2", "not json".getBytes)
+      assert(bs == 400 && jsonField(bb, "message") == "Invalid JSON body")
+    }
+  }
+
+  test("Spark jobs per request on a loaded snapshot: GET 2, similar 2, " +
+       "PUT 2, DELETE 1") {
+    // one client, so every job between two sentinels is that request's
+    // (handler threads carry no job group); a re-added existence probe
+    // or a second read of the node changes a count here
+    val api = nativeApi(nativeSnapshot())
+    val sc = spark.sparkContext
+    val started = new AtomicInteger(0)
+    val sentinelsDone = ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      private val sentinels = new ConcurrentHashMap[Int, String]()
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val g = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("")
+        if (g.startsWith("http-sentinel-")) sentinels.put(js.jobId, g)
+        else started.incrementAndGet()
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(sentinels.remove(je.jobId)).foreach(sentinelsDone.add)
+    }
+    var sentinel = 0
+    /** Jobs started since the last call, once the listener bus has
+      * delivered them (a sentinel job's end orders the bus).
+      */
+    def jobsSinceLast(): Int = {
+      sentinel += 1
+      val g = s"http-sentinel-$sentinel"
+      sc.setJobGroup(g, "sentinel")
+      spark.range(1).collect()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!sentinelsDone.contains(g) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(sentinelsDone.contains(g), s"listener-bus sentinel $g not observed within 60s")
+      started.getAndSet(0)
+    }
+    sc.addSparkListener(listener)
+    try serve(api) { base =>
+      jobsSinceLast()
+      def jobs(method: String, path: String, body: String = ""): Int = {
+        val (st, b) = send(method, base + path, body.getBytes)
+        assert(st == 200, s"$method $path: $st $b")
+        jobsSinceLast()
+      }
+      val counts = Seq(
+        "GET" -> jobs("GET", "/api/nodes/1"),
+        "similar" -> jobs("GET", "/api/nodes/1/similar?limit=5"),
+        "PUT" -> jobs("PUT", "/api/nodes/2", """{"title":"Patched"}"""),
+        "DELETE" -> jobs("DELETE", "/api/nodes/4"),
+        "GET after writes" -> jobs("GET", "/api/nodes/2"),
+        "similar after writes" -> jobs("GET", "/api/nodes/2/similar?limit=5"))
+      assert(counts == Seq("GET" -> 2, "similar" -> 2, "PUT" -> 2, "DELETE" -> 1,
+        "GET after writes" -> 2, "similar after writes" -> 2))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stop() ends every handler thread of the server") {
+    def handlers(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(HttpApiServer.HandlerThreadPrefix)).toSet
+    val before = handlers()
+    var ours = Set.empty[Thread]
+    withServer() { (base, _) =>
+      assert(send("GET", s"$base/health")._1 == 200)
+      ours = handlers() -- before
+    }
+    assert(ours.nonEmpty, "the request ran on no handler thread of this server")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (ours.exists(_.isAlive) && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(!ours.exists(_.isAlive),
+      s"handler threads alive after stop(): ${ours.filter(_.isAlive).map(_.getName)}")
   }
 }

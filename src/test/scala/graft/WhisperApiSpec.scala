@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.{ApiError, ApiOk, Validation, WhisperApi}
 import graft.enrich.{EnrichService, MockEmbedder, MockTagger}
 import graft.io.WhisperState
 import graft.model.Node
+import graft.similarity.SimilarityOps
 
 /** End-to-end facade test replaying the reference's CRUD e2e script
   * (CURL_TESTS.md:390-445): create → get → update → verify → count →
@@ -155,5 +157,45 @@ class WhisperApiSpec extends SparkSpec {
         assert(df.collect()(0).getString(8) == "2024/01/01/f_1_0001.pdf")
       case e => fail(e.toString)
     }
+  }
+
+  test("literal-vector top-k returns exactly topKSimilar's (id, sim) " +
+       "sequence, ties and null embeddings included") {
+    import spark.implicits._
+    val vecs: Seq[Option[Seq[Float]]] = Seq(
+      // 1-4: one direction, so sim 1.0 ties for each of them
+      Some(Seq(1f, 0f, 0f)), Some(Seq(1f, 0f, 0f)), Some(Seq(1f, 0f, 0f)), Some(Seq(2f, 0f, 0f)),
+      // 5, 7-9 score 0.0 against 1-4: orthogonal, zero norm, shorter, empty
+      Some(Seq(0f, 1f, 0f)), None, Some(Seq(0f, 0f, 0f)), Some(Seq(1f, 1f)), Some(Seq.empty),
+      Some(Seq(0.3f, 0.5f, 0.1f)), Some(Seq(-1f, 0f, 0f)), None)
+    val nodes = vecs.zipWithIndex.map { case (v, i) =>
+      Node(id = i + 1L, title = s"N${i + 1}", subject = "s", author = "a", embedding = v)
+    }.toDS().toDF()
+    val emb = nodes.filter(col("embedding").isNotNull)
+    def idSim(df: DataFrame): Seq[(Long, Double)] =
+      df.select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val native = SimilarityOps.nativeCosineEnabled
+    Graft.install(spark)
+    try for (useNative <- Seq(false, true); (v, i) <- vecs.zipWithIndex; k <- Seq(1, 3, 20)
+             if v.isDefined) {
+      SimilarityOps.nativeCosineEnabled = useNative
+      val id = i + 1L
+      val expected = idSim(SimilarityOps.topKSimilar(emb, "id", "embedding", id, k))
+      assert(idSim(SimilarityOps.topKSimilarTo(emb, "id", "embedding", id, v.get, k)) == expected,
+        s"query $id, k $k, native cosine $useNative")
+    } finally SimilarityOps.nativeCosineEnabled = native
+
+    // the facade: same ranking, a node without an embedding has no
+    // neighbours, a missing node is a 404
+    val api = new WhisperApi(WhisperDB.empty(spark).withState(
+      WhisperDB.empty(spark).state.copy(nodes = nodes, declaredSize = vecs.size)),
+      new EnrichService(new MockEmbedder(8), new MockTagger))
+    for (id <- 1L to vecs.size) api.similarNodes(id, 3) match {
+      case ApiOk(df) =>
+        assert(idSim(df) == idSim(SimilarityOps.topKSimilar(emb, "id", "embedding", id, 3)),
+          s"facade, query $id")
+      case e => fail(s"similarNodes($id): $e")
+    }
+    assert(api.similarNodes(99L) == ApiError(404, "Node 99 not found"))
   }
 }
