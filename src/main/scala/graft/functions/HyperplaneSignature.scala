@@ -12,18 +12,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * projection — no per-bit intermediate arrays, no interpreted
   * higher-order functions.
   *
-  * The HOF formulation (`VectorFunctions.hyperplaneSignature`'s
-  * fallback) builds `bits` separate zip_with/transform/aggregate trees;
-  * Catalyst HOFs are CodegenFallback, so every band-key computation ran
-  * interpreted, re-walking the vector once per bit (48× at the soak's
-  * b16), and the r9 `centerSignature` option multiplied that again by
-  * nesting the mean aggregate inside the transform lambda — re-evaluated
-  * per ELEMENT (measured: the binarydedup soak's signature stage alone
-  * consumed CPU-hours at 300×, r10 finding). This expression is
-  * bit-identical to the HOF form — same Long-wrapping sign mix, same
-  * IEEE double division by 1024, same strict left-fold accumulation in
-  * index order per bit, same `proj > 0` test — so every oracle-replayed
-  * band key is unchanged; it is just compiled.
+  * The HOF formulation (`VectorFunctions.hyperplaneSignatureHof`, the
+  * test reference) builds `bits` separate zip_with/transform/aggregate
+  * trees; Catalyst HOFs are CodegenFallback, so every band-key
+  * computation ran interpreted, re-walking the vector once per bit (48×
+  * at the soak's b16), and the r9 `centerSignature` option multiplied
+  * that again by nesting the mean aggregate inside the transform lambda
+  * — re-evaluated per ELEMENT (measured: the binarydedup soak's
+  * signature stage alone consumed CPU-hours at 300×, r10 finding). This
+  * expression is bit-identical to the HOF form — same Long-wrapping
+  * sign mix, same IEEE double division by 1024, same strict left-fold
+  * accumulation in index order per bit, same `proj > 0` test — so every
+  * oracle-replayed band key is unchanged; it is just compiled.
   *
   * `center = true` first computes the vector's mean (left-fold sum /
   * size, both in doubles) and projects the mean-centered elements —
@@ -37,8 +37,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * branch and the whole signature is 0L — centered or not (the mean
   * nulls too). This expression short-circuits to the same 0L the
   * moment it sees a null slot, instead of reading it as 0.0 (which
-  * would silently give a null-containing vector DIFFERENT band keys
-  * depending on whether the native path was installed — r10 ADVICE).
+  * would give a null-containing vector band keys different from the
+  * HOF reference's — r10 ADVICE).
   */
 case class HyperplaneSignatureExpr(child: Expression, bits: Int,
                                    center: Boolean)

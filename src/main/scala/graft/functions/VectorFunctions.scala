@@ -70,15 +70,6 @@ object VectorFunctions {
       .otherwise(lit(-1.0))
   }
 
-  /** Set by Graft.install: route the signature through the native
-    * codegen Expression (bit-identical arithmetic — same sign mix,
-    * same strict left-fold order — so band keys are unchanged; the HOF
-    * form below is CodegenFallback and re-walks the vector once per
-    * bit interpreted, which the r10 binarydedup soak measured as the
-    * dominant CPU sink).
-    */
-  @volatile var nativeSignatureEnabled: Boolean = false
-
   /** Random-hyperplane (sign) LSH signature: bit j = [Σ_i sign_ij·v_i > 0].
     * Cosine-similar vectors collide with probability 1 − θ/π per bit;
     * bucketing on the signature is the LSH scale path for similarity
@@ -87,15 +78,20 @@ object VectorFunctions {
     * elements instead (the all-nonnegative-population fix — see
     * `SimilarityOps.lshCandidatePairs`); the mean is the left-fold
     * double sum / size, and identical vectors still share every band.
+    * Built as the native codegen expression `Graft.hyperplaneSig`.
     */
   def hyperplaneSignature(v: Column, bits: Int,
-                          center: Boolean = false): Column = {
-    // per-session guard (r10 ADVICE): the flag is JVM-global, but the
-    // function is registered per-session — a session without the
-    // extension falls back to the HOF twin instead of failing analysis
-    if (nativeSignatureEnabled &&
-        graft.Graft.nativeFnAvailable("hyperplane_sig"))
-      return graft.Graft.hyperplaneSig(v, bits, center)
+                          center: Boolean = false): Column =
+    graft.Graft.hyperplaneSig(v, bits, center)
+
+  /** The higher-order-function spelling of [[hyperplaneSignature]]
+    * (same sign mix, same strict left-fold order), kept as the test
+    * reference the native expression must match bit for bit. It is
+    * CodegenFallback and re-walks the vector once per bit, so
+    * production code does not call it.
+    */
+  def hyperplaneSignatureHof(v: Column, bits: Int,
+                             center: Boolean = false): Column = {
     val input =
       if (!center) v
       else {
@@ -123,13 +119,19 @@ object VectorFunctions {
     * boundaries — band keys routed through word extraction are
     * byte-identical to the old shift-and-mask slices (spec-pinned).
     * Identical vectors share every word; `center` behaves exactly as in
-    * the single-long form.
+    * the single-long form. Built as the native codegen expression
+    * `Graft.hyperplaneSigWide`.
     */
   def hyperplaneSignatureWide(v: Column, words: Int, bitsPerWord: Int,
-                              center: Boolean = false): Column = {
-    if (nativeSignatureEnabled &&
-        graft.Graft.nativeFnAvailable("hyperplane_sig_wide"))
-      return graft.Graft.hyperplaneSigWide(v, words, bitsPerWord, center)
+                              center: Boolean = false): Column =
+    graft.Graft.hyperplaneSigWide(v, words, bitsPerWord, center)
+
+  /** The higher-order-function spelling of [[hyperplaneSignatureWide]],
+    * kept as its bit-for-bit test reference; production code does not
+    * call it.
+    */
+  def hyperplaneSignatureWideHof(v: Column, words: Int, bitsPerWord: Int,
+                                 center: Boolean = false): Column = {
     val input =
       if (!center) v
       else {

@@ -384,7 +384,7 @@ object Corpus {
     * is flagged); false positives at the textbook (1−e^(−kn/m))^k
     * rate, deterministic — the oracle replays the exact bit set, so
     * even the false positives hash-match. Output per train doc:
-    * (id, n_shingles, n_flagged, flagged). Requires `Graft.install`.
+    * (id, n_shingles, n_flagged, flagged).
     */
   def bloomDecontaminate(df: DataFrame, idCol: String, textCol: String,
                          evalPred: org.apache.spark.sql.Column,

@@ -556,8 +556,7 @@ object Dedup {
     * rank-window blocking as [[sortedNeighborhoodPairs]]. The verify
     * is graft's native codegen `jaro_winkler` expression
     * (DuckDB-`jaro_winkler_similarity`-bit-identical: 0.1 prefix bonus
-    * up to 4 chars gated on j > 0.7, zero-match → 0). Requires
-    * `Graft.install` on the session.
+    * up to 4 chars gated on j > 0.7, zero-match → 0).
     */
   def jaroWinklerPairs(df: DataFrame, idCol: String, strCol: String,
                        window: Int = 3,
@@ -901,7 +900,7 @@ object Dedup {
 
   /** Per-blob byte-distribution sketch: the native `byte_histogram`
     * codegen expression (normalized `bins`-bin float vector, one fused
-    * loop over the payload — requires `Graft.install`). The content
+    * loop over the payload). The content
     * feature every binary near-dup below keys on: re-encoded or
     * lightly-edited blobs keep their byte distribution while their
     * md5 changes.

@@ -185,7 +185,7 @@ object Multimodal {
     * REAL header parse via the native `exif_orientation` codegen
     * expression (SOI → APP1 `Exif\0\0` → TIFF IFD0 tag 0x0112): pure
     * column work, O(header) per blob, stays inside whole-stage
-    * codegen. Requires `Graft.install` on the session.
+    * codegen.
     */
   def withExifOrientation(df: DataFrame, binCol: String): DataFrame =
     df.withColumn("exif_orientation",
@@ -452,7 +452,7 @@ object Multimodal {
     * preferred path whenever the "codec" is byte arithmetic (no library
     * call): the payload never leaves Tungsten rows, and operators
     * downstream stay codegen'd. Null payloads get the all-zero vector,
-    * matching `featureStub`. Requires `Graft.install` on the session.
+    * matching `featureStub`.
     */
   def withFeaturesColumnar(df: DataFrame, binCol: String,
                            bins: Int = 16): DataFrame =

@@ -347,7 +347,6 @@ object EventsPack extends QueryPack {
     //      estimates per event-type pair (inclusion-exclusion over
     //      mergeable sketches) vs the exact intersection ----
     "q161_kmv_setops" -> { (s, d) =>
-      graft.Graft.install(s)
       val d0 = Tables.events(s, d).filter(col("value") > 150)
         .select(col("event_type").as("t"), col("user_id").as("u")).distinct()
       val h = d0.select(col("t"), col("u"),

@@ -369,7 +369,6 @@ object RelationalPack extends QueryPack {
     //      statistics primitive — exact Σf² vs the sketch inner
     //      product, which never underestimates ----
     "q159_join_size" -> { (s, d) =>
-      graft.Graft.install(s)
       val hashed = Tables.lineitem(s, d).select(
         graft.functions.TextFunctions
           .md5Long(col("l_partkey").cast("string")).as("h"))

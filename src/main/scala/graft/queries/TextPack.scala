@@ -336,7 +336,6 @@ object TextPack extends QueryPack {
     // ---- KMV sketch: approx distinct tokens per source (bounded-state
     //      native aggregate; deterministic, oracle replays it exactly) ----
     "q56_kmv_distinct" -> { (s, d) =>
-      graft.Graft.install(s)
       val hashed = Tables.documents(s, d)
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
         .select(col("source"), TextFunctions.md5Long(col("tok")).as("h"))
@@ -371,7 +370,6 @@ object TextPack extends QueryPack {
 
     // ---- CMS heavy hitters: count-min estimates for the top tokens ----
     "q79_cms_heavy_hitters" -> { (s, d) =>
-      graft.Graft.install(s)
       val occ = Tables.documents(s, d)
         .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
       // md5 once per DISTINCT token, hash-joined back to occurrences

@@ -508,7 +508,6 @@ object TrainPack extends QueryPack {
     // ---- Jaro-Winkler name matching: native codegen expression over
     //      the sorted-neighborhood candidates (q188's blocking) ----
     "q190_jaro_winkler" -> { (s, d) =>
-      graft.Graft.install(s)
       graft.pipeline.Dedup.jaroWinklerPairs(
           Tables.customer(s, d), "c_custkey", "c_name",
           window = 3, threshold = 0.95)

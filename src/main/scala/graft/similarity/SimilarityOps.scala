@@ -35,21 +35,8 @@ case class LshBlocked(bands: Int = 3, bitsPerBand: Int = 4)
   */
 object SimilarityOps {
 
-  /** Set by Graft.install: route cosine through the native codegen
-    * Expression (bit-identical to the HOF fold — same accumulation
-    * order — so results are unchanged, just faster).
-    */
-  @volatile var nativeCosineEnabled: Boolean = false
-
-  private def cosineImpl(a: Column, b: Column): Column =
-    // per-session guard (r10 ADVICE): registration is per-session, the
-    // flag is JVM-global — sessions without the extension use the HOF twin
-    if (nativeCosineEnabled && graft.Graft.nativeFnAvailable("cosine_sim"))
-      graft.Graft.cosineSim(a, b)
-    else cosine(a, b)
-
   /** Rounded cosine similarity — the canonical comparison key. */
-  def sim6(a: Column, b: Column): Column = round(cosineImpl(a, b), 6)
+  def sim6(a: Column, b: Column): Column = round(graft.Graft.cosineSim(a, b), 6)
 
   /** V5: top-k most similar rows to `queryId`'s vector; excludes self;
     * keeps all payload columns + `sim` (reference main.cpp:518-577,
@@ -244,7 +231,7 @@ object SimilarityOps {
     // collide in every band (the transform is deterministic). Mixed-
     // sign embeddings don't need it, and the default keeps the band
     // keys the r1-r8 oracles replay. The centering lives INSIDE
-    // the signature expression (native codegen when installed) — the r9
+    // the native signature expression — the r9
     // transform-with-nested-mean spelling re-evaluated the mean
     // aggregate per element per bit, interpreted (r10 soak finding).
     //

@@ -159,8 +159,7 @@ object EventStreams {
     * micro-batch partials combine exactly like batch map-side partials
     * and the streamed sketch is BIT-IDENTICAL to the batch one — the
     * property that lets a streaming ingest maintain the same heavy-
-    * hitter index the batch pipeline queries. Requires
-    * `Graft.install` on the session (function-registry resolution).
+    * hitter index the batch pipeline queries.
     */
   def hourlySketch(events: DataFrame, depth: Int = 4,
                    width: Int = 256): DataFrame =
@@ -178,7 +177,7 @@ object EventStreams {
     * distinct-user estimates are BIT-IDENTICAL to the batch sketch
     * (the internal k-minima state is a set-union fold — associative
     * and commutative across micro-batch partials; the surfaced value
-    * is the estimate). Requires `Graft.install`.
+    * is the estimate).
     */
   def hourlyDistinctSketch(events: DataFrame, k: Int = 64): DataFrame =
     events
@@ -360,7 +359,6 @@ object EventStreams {
     * semantics identical to the batch operator's probe side
     * (spec-pinned stream==batch): no false negatives, deterministic
     * false positives. Docs with no shingles (empty text) emit no row.
-    * Requires `Graft.install` on the session.
     */
   def corpusDecontaminateStreamBloom(newDocs: DataFrame, corpus: DataFrame,
                                      idCol: String = "doc_id",

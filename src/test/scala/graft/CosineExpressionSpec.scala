@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 import graft.similarity.SimilarityOps
 
 class CosineExpressionSpec extends SparkSpec {
@@ -80,5 +81,42 @@ class CosineExpressionSpec extends SparkSpec {
     assert("""\*\(\d+\) Project""".r.findFirstIn(plan).isDefined &&
       plan.contains("jaro_winkler"),
       s"expected the expression inside a codegen stage:\n$plan")
+  }
+
+  test("native expressions resolve on a session that never ran install") {
+    Graft.install(spark)
+    val fresh = spark.newSession()
+    // global and grouped: each sketch, and the rows equal `spark`'s
+    def sketches(s: SparkSession): Seq[Row] = {
+      val hashed = s.range(0, 600).select((col("id") % 5).as("g"),
+        TextFunctions.md5Long(col("id").cast("string")).as("h"))
+      val cols = Seq(Graft.kmvSketch(col("h"), 64).as("kmv"),
+        Graft.cmsSketch(col("h"), 4, 64).as("cms"),
+        Graft.bloomSketch(col("h"), 1024, 3).as("bloom"))
+      hashed.agg(cols.head, cols.tail: _*).collect().toSeq ++
+        hashed.groupBy(col("g")).agg(cols.head, cols.tail: _*)
+          .orderBy(col("g")).collect()
+    }
+    val expected = sketches(spark)
+    val prior = SparkSession.getActiveSession
+    SparkSession.setActiveSession(fresh)
+    try {
+      assert(sketches(fresh) == expected, "sketches equal the installed session's")
+      val vecs = fresh.range(0, 200).select(
+        transform(sequence(lit(0), lit(15)),
+          i => (sin(col("id") * 131 + i) + 0.25).cast("float")).as("a"),
+        transform(sequence(lit(0), lit(15)),
+          i => cos(col("id") * 17 + i).cast("float")).as("b"))
+      val sim = vecs.select(SimilarityOps.sim6(col("a"), col("b")).as("s"))
+      assert(sim.queryExecution.optimizedPlan.toString.contains("cosine_sim"),
+        s"sim6 builds the native cosine:\n${sim.queryExecution.optimizedPlan}")
+      for (center <- Seq(false, true)) {
+        val sig = vecs.select(
+          VectorFunctions.hyperplaneSignature(col("a"), 24, center).as("native"),
+          VectorFunctions.hyperplaneSignatureHof(col("a"), 24, center).as("hof"))
+        assert(sig.filter(col("native") =!= col("hof")).count() == 0,
+          s"native signature equals its HOF reference (center=$center)")
+      }
+    } finally prior.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
   }
 }

@@ -287,15 +287,8 @@ class PipelineSpec extends SparkSpec {
       (9000003L, Seq(-1f, -2f, -3f)),          // all-negative
       (9000004L, Seq(5f))).toDF("id", "v")     // single element
     for (df <- Seq(emb, hist, edges); center <- Seq(false, true)) {
-      // the pre-r10 interpreted spelling, built with the flag off;
-      // try/finally so a throw can't leave the forked JVM's remaining
-      // tests silently on the interpreted path (r10 ADVICE)
-      val saved = VectorFunctions.nativeSignatureEnabled
-      val hofCol =
-        try {
-          VectorFunctions.nativeSignatureEnabled = false
-          VectorFunctions.hyperplaneSignature(col("v"), 48, center)
-        } finally VectorFunctions.nativeSignatureEnabled = saved
+      // the pre-r10 interpreted spelling, kept as the reference
+      val hofCol = VectorFunctions.hyperplaneSignatureHof(col("v"), 48, center)
       val pairs = df.select(col("id"),
         VectorFunctions.hyperplaneSignature(col("v"), 48, center)
           .as("native"),
@@ -323,12 +316,7 @@ class PipelineSpec extends SparkSpec {
     }
     val df = rows.toDF("id", "v").repartition(7)
     for (center <- Seq(false, true); bits <- Seq(1, 24, 63)) {
-      val saved = VectorFunctions.nativeSignatureEnabled
-      val hofCol =
-        try {
-          VectorFunctions.nativeSignatureEnabled = false
-          VectorFunctions.hyperplaneSignature(col("v"), bits, center)
-        } finally VectorFunctions.nativeSignatureEnabled = saved
+      val hofCol = VectorFunctions.hyperplaneSignatureHof(col("v"), bits, center)
       val diverged = df.select(col("id"),
           VectorFunctions.hyperplaneSignature(col("v"), bits, center)
             .as("native"),
@@ -345,12 +333,7 @@ class PipelineSpec extends SparkSpec {
         when(pmod(col("id") + i, lit(5)) === 0, lit(null)).otherwise(x)
           .cast("float")).as("v"))
     for (center <- Seq(false, true)) {
-      val saved = VectorFunctions.nativeSignatureEnabled
-      val hofCol =
-        try {
-          VectorFunctions.nativeSignatureEnabled = false
-          VectorFunctions.hyperplaneSignature(col("v"), 48, center)
-        } finally VectorFunctions.nativeSignatureEnabled = saved
+      val hofCol = VectorFunctions.hyperplaneSignatureHof(col("v"), 48, center)
       val out = withNulls.select(col("id"),
         VectorFunctions.hyperplaneSignature(col("v"), 48, center)
           .as("native"),
@@ -417,12 +400,7 @@ class PipelineSpec extends SparkSpec {
         when(pmod(col("id") + i, lit(7)) === 0, lit(null)).otherwise(x)
           .cast("float")).as("v"))
     for (df <- Seq(rdf, withNulls); center <- Seq(false, true)) {
-      val saved = VectorFunctions.nativeSignatureEnabled
-      val hofCol =
-        try {
-          VectorFunctions.nativeSignatureEnabled = false
-          VectorFunctions.hyperplaneSignatureWide(col("v"), 4, 20, center)
-        } finally VectorFunctions.nativeSignatureEnabled = saved
+      val hofCol = VectorFunctions.hyperplaneSignatureWideHof(col("v"), 4, 20, center)
       val out = df.select(col("id"),
         VectorFunctions.hyperplaneSignatureWide(col("v"), 4, 20, center)
           .as("native"),

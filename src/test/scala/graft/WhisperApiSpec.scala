@@ -174,16 +174,13 @@ class WhisperApiSpec extends SparkSpec {
     val emb = nodes.filter(col("embedding").isNotNull)
     def idSim(df: DataFrame): Seq[(Long, Double)] =
       df.select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val native = SimilarityOps.nativeCosineEnabled
     Graft.install(spark)
-    try for (useNative <- Seq(false, true); (v, i) <- vecs.zipWithIndex; k <- Seq(1, 3, 20)
-             if v.isDefined) {
-      SimilarityOps.nativeCosineEnabled = useNative
+    for ((v, i) <- vecs.zipWithIndex; k <- Seq(1, 3, 20) if v.isDefined) {
       val id = i + 1L
       val expected = idSim(SimilarityOps.topKSimilar(emb, "id", "embedding", id, k))
       assert(idSim(SimilarityOps.topKSimilarTo(emb, "id", "embedding", id, v.get, k)) == expected,
-        s"query $id, k $k, native cosine $useNative")
-    } finally SimilarityOps.nativeCosineEnabled = native
+        s"query $id, k $k")
+    }
 
     // the facade: same ranking, a node without an embedding has no
     // neighbours, a missing node is a 404
