@@ -15,6 +15,21 @@ import graft.functions.{BloomSketch, ByteHistogram, CmsSketch, CosineSimilarity,
   */
 object Graft {
 
+  /** The session every harness main runs on: `local[cores]` with as many
+    * shuffle partitions, UTC session time, no UI, WARN logging, and
+    * [[install]]'s settings. `cores` defaults to `SPARK_GRAFT_CPUS`, else 32.
+    */
+  def localSession(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.toInt)): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    install(spark)
+  }
+
   /** Apply the engine's session settings to `spark`. The native
     * expressions need no set-up; a deployment that wants other values
     * sets either conf after this call.

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: executes SparkEntry.entry (the driver's rows>0
   * smoke check) and prints the row count + first rows.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.install(spark)
+    val spark = Graft.localSession(4)
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows=${df.count()}")
     df.show(5, truncate = false)

@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.install(spark)
+    val spark = Graft.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -27,21 +18,16 @@ object Verify {
       // accumulate storage across the 100+ query session
       Graft.evictAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** Writes `oracles` (query name → DuckDB SQL) to `outDir/oracle_sql.json`.
+    * `Json.str` escapes quote, backslash and every control char (<0x20):
+    * one tab or CR left raw in an oracle's SQL would make the oracle
+    * compare's JSON parse fail, and every query would read as wrong.
+    */
+  private[graft] def writeOracleSql(outDir: String, oracles: Iterable[(String, String)]): Unit =
+    Files.writeString(Paths.get(outDir, "oracle_sql.json"), oracles
+      .map { case (k, v) => s"${api.Json.str(k)}: ${api.Json.str(v)}" }.mkString("{", ",", "}"))
 }

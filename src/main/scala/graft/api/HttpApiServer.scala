@@ -575,12 +575,13 @@ object HttpApiServer {
   val HandlerThreadPrefix = "http-api-handler-"
 }
 
-/** Minimal JSON writers shared by the HTTP layer — same escaping and
+/** Minimal JSON writers shared by the HTTP layer and `Verify`'s
+  * `oracle_sql.json` — same escaping and
   * node field order as the `.wdb` serializer (reference
   * GNode.cpp:118-137: "LinkedNodes" capitalization, embedding omitted
   * when absent/empty).
   */
-private[api] object Json {
+private[graft] object Json {
 
   def str(s: String): String = {
     val b = new StringBuilder("\"")

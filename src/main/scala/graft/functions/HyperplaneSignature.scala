@@ -162,8 +162,9 @@ case class HyperplaneSignatureExpr(child: Expression, bits: Int,
   * bits each, `array<long>` output — the vector-side twin of
   * `Dedup.simhashTableWide`, lifting the one-long band-key cap the
   * engine has now measured saturating four times (r11 verdict: EdgeProbe
-  * at fixed b12 grew candidates 11.1× for 3.33× data; BlobProbe
-  * 1000×/b16 realized 83% of the 3·2¹⁶ sign cells — the single-long
+  * at fixed b12 grew candidates 11.1× for 3.33× data,
+  * `artifacts/edge_probe.json`; BlobProbe 1000×/b16 realized 83% of the
+  * 3·2¹⁶ sign cells, `artifacts/blob_probe.json` — the single-long
   * form had no knob left past bands×bitsPerBand = 63).
   *
   * Bit j of word w projects with the SAME per-(dimension, bit) sign mix

@@ -112,7 +112,8 @@ object VectorFunctions {
     * sign bits each (`array<long>`, word 0 first) — the vector-side
     * sketch that keeps following the occupancy policy past the one-long
     * cap (the saturation `SimilarityOps.naturalBits`' scaladoc records,
-    * measured on the vector side by EdgeProbe/BlobProbe). Bit j of
+    * measured on the vector side by EdgeProbe/BlobProbe,
+    * `artifacts/edge_probe.json` and `artifacts/blob_probe.json`). Bit j of
     * word w uses the SAME sign mix as [[hyperplaneSignature]] at global
     * bit index w·bitsPerWord + j, so a wide signature whose total width
     * fits one long is exactly the single-long signature cut at word

@@ -248,12 +248,16 @@ object RelationalPack extends QueryPack {
     //      8-way salt; results identical to the plain join, so the
     //      oracle is the unsalted SQL ----
     // ---- MERGE INTO / CDC apply: updates, deletes, and inserts folded
-    //      into the target in one deterministic batch ----
+    //      into the target in one deterministic batch. The updated
+    //      price is exact DECIMAL(18,2) arithmetic cast to DOUBLE: a
+    //      double rounded at a .xx5 boundary rounds up in Spark and
+    //      down in DuckDB ----
     "q124_cdc_merge" -> { (s, d) =>
       val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority"))
       val upd = o.filter(col("o_orderkey") % 97 === 0)
-        .withColumn("o_totalprice", round(col("o_totalprice") * 1.1, 2))
+        .withColumn("o_totalprice", round(col("o_totalprice").cast("decimal(18,2)") *
+          lit(BigDecimal("1.1")), 2).cast("double"))
         .withColumn("o_orderstatus", lit("U"))
         .withColumn("__op", lit("U")).withColumn("__seq", lit(1L))
       val del = o.filter(col("o_orderkey") % 101 === 0)
@@ -518,7 +522,8 @@ object RelationalPack extends QueryPack {
       """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus,
         |    o_totalprice, o_orderpriority FROM orders),
         |upd AS (SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
-        |    ROUND(o_totalprice * 1.1, 2) AS o_totalprice, o_orderpriority,
+        |    CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,2)) * 1.1, 2) AS DOUBLE)
+        |      AS o_totalprice, o_orderpriority,
         |    'U' AS op, 1 AS seq FROM o WHERE o_orderkey % 97 = 0),
         |del AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         |    o_orderpriority, 'D' AS op, 2 AS seq FROM o

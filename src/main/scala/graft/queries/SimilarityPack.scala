@@ -95,7 +95,7 @@ object SimilarityPack extends QueryPack {
     //      twin of the q53/q55 blocking at post-cap width (band keys
     //      ride the multi-word array<long> signature, r11 order sheet
     //      #1; EdgeProbe measured the frozen single-long width growing
-    //      candidates 11.1× for 3.33× data) ----
+    //      candidates 11.1× for 3.33× data, artifacts/edge_probe.json) ----
     "q254_lsh_wide" -> { (s, d) =>
       SimilarityOps.lshCandidatePairs(Tables.embeddings(s, d), "vec_id",
           "embedding", threshold = 0.3, bands = 6, bitsPerBand = 11)

@@ -166,7 +166,8 @@ object SimilarityOps {
     * SimHash chunks): the smallest `b` with n / 2^b ≤ targetOccupancy,
     * clamped to [floor, cap]. A width HELD FIXED across a data decade
     * saturates — candidates grow ~n²/2^b once buckets fill (measured
-    * three times: EdgeProbe band keys, BlobProbe sign cells, and q48's
+    * three times: EdgeProbe band keys (`artifacts/edge_probe.json`),
+    * BlobProbe sign cells (`artifacts/blob_probe.json`), and q48's
     * 64-value SimHash chunks emitting 13% of ALL pairs at sf0.1) — so
     * any operator sizing a key space should derive it from n here
     * rather than hard-code it. Promoted out of `tools/ScaleSmoke`
@@ -180,7 +181,8 @@ object SimilarityOps {
     * probability 1 − θ/π, so a b-bit band collides at (1 − θ/π)^b and
     * widening b cuts moderate-similarity recall exponentially while
     * the OR-construction over `bands` claws it back. Measured
-    * (EdgeProbe, 2 M replicated vectors, threshold 0.4): b12 emits
+    * (EdgeProbe, 2 M replicated vectors, threshold 0.4;
+    * `artifacts/edge_probe*.json`): b12 emits
     * 1.68 B candidates, b20 emits 9.8 M — but b20's candidate set is
     * SMALLER than b12's VERIFIED edge set at 300× (0.88 M candidates
     * vs 1.14 M true edges), i.e. wide keys at 3 bands drop real
@@ -241,8 +243,9 @@ object SimilarityOps {
     // whenever bands×bitsPerBand ≤ 63 (spec-pinned), so every existing
     // oracle replays unchanged, and the key space now follows the
     // occupancy policy PAST the one-long cap (EdgeProbe measured 11.1×
-    // candidates for 3.33× data at the frozen b12; BlobProbe 1000×/b16
-    // realized 83% of all sign cells — the old form had no knob left).
+    // candidates for 3.33× data at the frozen b12, artifacts/edge_probe.json;
+    // BlobProbe 1000×/b16 realized 83% of all sign cells,
+    // artifacts/blob_probe.json — the old form had no knob left).
     val banded = emb
       .select(col(idCol), col(vecCol),
         posexplode(hyperplaneSignatureWide(col(vecCol), bands, bitsPerBand,
@@ -1165,7 +1168,7 @@ object SimilarityOps {
     * measurement called for: 2-round-Lloyd coarse centroids
     * ([[kmeansCentroids]]) + per-subspace trained codebooks
     * ([[pqCodebookFit]]) at the same code budget. MEASURED (r12, same
-    * fixture and budget, `ladder_probe_sf01_r12.json`): trained wins
+    * fixture and budget, `artifacts/ladder_probe_sf01_r12.json`): trained wins
     * every rung — 314/330/346/380‰ at nprobe 1/2/4/8 vs raw's
     * 264/282/290/276 — and is the only encoding whose recall rises
     * MONOTONICALLY with nprobe (raw and residual both plateau or dip:

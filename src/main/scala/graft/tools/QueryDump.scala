@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{Graft, SparkEntry}
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.{Graft, SparkEntry, Verify}
 
 /** Dev tool: dump ONE named query's result to parquet for a targeted
   * oracle compare (tools/validate.py with a filter), without paying a
@@ -10,42 +12,20 @@ import graft.{Graft, SparkEntry}
 object QueryDump {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, outDir) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.localSession()
     spark.sparkContext.setLogLevel("ERROR")
-    Graft.install(spark)
     SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     // merge this query's oracle into outDir/oracle_sql.json so
     // tools/validate.py can compare without a full Verify pass
     SparkEntry.oracleSql.get(name).foreach { sql =>
-      val p = java.nio.file.Paths.get(s"$outDir/oracle_sql.json")
+      val p = Paths.get(outDir, "oracle_sql.json")
       val existing: Map[String, String] =
-        if (java.nio.file.Files.exists(p)) {
-          val txt = java.nio.file.Files.readString(p)
-          // minimal parse: reuse Spark's JSON reader on the one-line file
-          import scala.jdk.CollectionConverters._
-          import com.fasterxml.jackson.databind.ObjectMapper
-          val m = new ObjectMapper().readValue(txt, classOf[java.util.Map[String, String]])
-          m.asScala.toMap
-        } else Map.empty
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val json = (existing + (name -> sql))
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(p, json)
+        if (Files.exists(p))
+          new ObjectMapper().readValue(Files.readString(p),
+            classOf[java.util.Map[String, String]]).asScala.toMap
+        else Map.empty
+      Verify.writeOracleSql(outDir, existing + (name -> sql))
     }
     spark.stop()
   }

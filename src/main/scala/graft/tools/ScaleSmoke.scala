@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Opt-in scale smoke (not part of the driver contract): runs the eight
@@ -43,8 +42,8 @@ import org.apache.spark.sql.functions._
   * Usage: tools/scale_smoke.sh [sfDir] [copies] [mode] [only] [bits]
   *   copies=10  → ~sf1-equivalent  (20k vectors)
   *   copies=100 → ~sf10-equivalent (200k vectors, ~6M corpus shingle rows)
-  *   mode = dense | constant (writes scale_smoke.json /
-  *     scale_smoke_constant.json; constant at copies≠100 stamps the
+  *   mode = dense | constant (writes artifacts/scale_smoke.json /
+  *     artifacts/scale_smoke_constant.json; constant at copies≠100 stamps the
   *     multiplier into the name, e.g. scale_smoke_constant_1000x.json)
   *   only = optional comma list of sections (cc,pagerank,kmeans,lpa,
   *     dedup,pq_adc,ivfpq,bloom,editdist,tfidfcos,curation,
@@ -85,13 +84,7 @@ object ScaleSmoke {
     require(unknown.isEmpty,
       s"unknown sections $unknown — valid: ${SectionNames.toSeq.sorted.mkString(",")}")
     def enabled(name: String): Boolean = only.isEmpty || only(name)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.install(spark)
+    val spark = graft.Graft.localSession(32)
 
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
     val peakTaskMem = new java.util.concurrent.atomic.AtomicLong(0)
@@ -157,11 +150,12 @@ object ScaleSmoke {
     val suffix =
       (if (only.isEmpty) "" else "_" + only.toSeq.sorted.mkString("_")) +
         bitsOverride.fold("")(b => s"_b$b")
-    val outFile =
+    val outFile = "artifacts/" + (
       if (mode == "constant" && copies != 100)
         s"scale_smoke_constant_${copies}x$suffix.json"
       else if (mode == "constant") s"scale_smoke_constant$suffix.json"
-      else s"scale_smoke$suffix.json"
+      else s"scale_smoke$suffix.json")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("artifacts"))
 
     // stage-completed events arrive on the async listener bus AFTER the
     // action returns — poll the counter to stability before taking a
@@ -315,8 +309,9 @@ object ScaleSmoke {
     // the text analogue of the vector sections' Rademacher replicas
     // (verbatim twins would make the OUTPUT quadratic by construction
     // and measure the workload, not the blocking). Candidates =
-    // Σ_buckets C(n_b, 2) via one aggregate — the same fan-out probe
-    // EdgeProbe/BlobProbe use — and must stay ~n × occupancy across
+    // Σ_buckets C(n_b, 2) via one aggregate — the same fan-out count
+    // the since-deleted EdgeProbe/BlobProbe took (artifacts/edge_probe*.json,
+    // artifacts/blob_probe*.json) — and must stay ~n × occupancy across
     // the decade; pairs is the operator's real output ---
     val lower = ('a' to 'z').mkString
     val upper = ('A' to 'Z').mkString
@@ -397,8 +392,9 @@ object ScaleSmoke {
       // passing the raw copies-way replica union instead made the
       // first measured "probe-only" number mostly plan overhead —
       // every task deserializing a 300-branch union subplan ×4
-      // references (the r10 EdgeProbe task-binary mechanism), 94.8 s
-      // at 300× against 1.9 MB of actual probe shuffle
+      // references (the r10 EdgeProbe task-binary mechanism, recorded
+      // in SURVEY.md), 94.8 s at 300× against 1.9 MB of actual probe
+      // shuffle
       val qside = embN.filter(col("vec_id") < math.max(nCents, 64))
         .localCheckpoint(true)
       for (p <- Seq(1, 4)) {
@@ -611,8 +607,8 @@ object ScaleSmoke {
       // 64 histogram bins, not the operator's 16-bin default: the
       // sign-cell count of b hyperplanes in a bins-dim space caps the
       // band-key population, and 16-dim histograms saturate ~12k keys
-      // (BlobProbe: at 10x/b12 ALL 12,288 keys are occupied and
-      // candidates go quadratic from there). The histogram width is
+      // (the since-deleted BlobProbe: at 10x/b12 ALL 12,288 keys are
+      // occupied and candidates go quadratic from there). The histogram width is
       // the second key-space knob and must grow with the corpus like
       // bitsPerBand does; 64 bins keeps occupancy bounded through the
       // soak ladder (12.2k buckets, max 191 at 10x).

@@ -17,16 +17,6 @@ BITS=${5:-}
 # "all" spelling so the positional slots don't shift (ADVICE r7 —
 # `scale_smoke.sh SF COPIES MODE '' 12` used to abort confusingly)
 [ -n "$BITS" ] && ONLY=${ONLY:-all}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-exec java $ADD_OPENS -Xmx56g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+. "$(dirname "$0")/jvm.sh"
+exec java $GRAFT_JVM_OPTS -Xmx56g -cp "$GRAFT_CP" \
   graft.tools.ScaleSmoke "$SF" "$COPIES" "$MODE" $ONLY $BITS
