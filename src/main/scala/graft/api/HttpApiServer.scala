@@ -350,8 +350,7 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
 
   private def similarNodes(req: Req): Resp = withNode(req) { n =>
     // reference hasEmbedding() is false for absent AND empty vectors
-    val hasEmb = !n.row.isNullAt(10) && n.row.getSeq[Float](10).nonEmpty
-    if (!hasEmb)
+    if (!n.embedding.exists(_.nonEmpty))
       return badRequest("Node has no embedding. Generate embedding first.")
     // invalid ?limit is IGNORED here (reference catches and keeps the
     // default, main.cpp:533-537) — unlike /api/nodes where it is a 400

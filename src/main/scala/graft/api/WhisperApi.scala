@@ -48,6 +48,11 @@ object Validation {
   */
 final case class NodeRead(db: WhisperDB, row: Row) {
   def id: Long = row.getLong(0)
+  /** The node's vector; None when the column is null. */
+  lazy val embedding: Option[Seq[Float]] = {
+    val e = row.fieldIndex("embedding")
+    Option.unless(row.isNullAt(e))(row.getSeq[Float](e).toSeq)
+  }
 }
 
 /** The reference's REST surface as a typed Scala facade — one method per
@@ -225,13 +230,10 @@ class WhisperApi(initial: WhisperDB,
     * same snapshot against the row's own vector. A node without an
     * embedding has no neighbours (an empty frame).
     */
-  def similarTo(n: NodeRead, limit: Int): DataFrame = {
-    val e = n.row.fieldIndex("embedding")
-    val vec = Option.unless(n.row.isNullAt(e))(n.row.getSeq[Float](e).toSeq)
+  def similarTo(n: NodeRead, limit: Int): DataFrame =
     SimilarityOps.topKSimilarTo(
-      n.db.nodes.filter(col("embedding").isNotNull && lit(vec.isDefined)),
-      "id", "embedding", n.id, vec.getOrElse(Seq.empty), limit)
-  }
+      n.db.nodes.filter(col("embedding").isNotNull && lit(n.embedding.isDefined)),
+      "id", "embedding", n.id, n.embedding.getOrElse(Seq.empty), limit)
 
   /** POST /api/nodes/:id/embedding (E5). */
   def generateEmbedding(id: Long): ApiResult[Long] =

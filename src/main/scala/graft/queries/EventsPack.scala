@@ -610,8 +610,7 @@ object EventsPack extends QueryPack {
     },
   )
 
-  private def md5LongSql(e: String): String =
-    s"(list_reduce(list_prepend(0::BIGINT, list_transform(string_split(substr(md5($e), 1, 15), ''), c -> strpos('0123456789abcdef', c)::BIGINT - 1)), (a, b) -> a * 16 + b) % 2147483647)"
+  import OracleSql.md5LongSql
 
   /** KMV estimate replay over a grouped hash list column expr (k=64). */
   private def kmvEstSql(hs: String): String =

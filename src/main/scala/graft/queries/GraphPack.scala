@@ -19,11 +19,7 @@ import graft.similarity.SimilarityOps
   */
 object GraphPack extends QueryPack {
 
-  // same fold-exact cosine fragments as SimilarityPack
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a::DOUBLE[], $b::DOUBLE[]), p -> p[1] * p[2])), (x, y) -> x + y)"
-  private def cosSql(a: String, b: String): String =
-    s"ROUND(${dotSql(a, b)} / (SQRT(${dotSql(a, a)}) * SQRT(${dotSql(b, b)})), 6)"
+  import OracleSql.cosSql
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- V2+V4: components of the cosine>=0.4 similarity graph ----

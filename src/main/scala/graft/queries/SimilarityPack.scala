@@ -16,9 +16,7 @@ import graft.similarity.SimilarityOps
 object SimilarityPack extends QueryPack {
 
   // -- DuckDB SQL fragments: the ONE shared spelling (OracleSql) --
-  private def dotSql(a: String, b: String): String = OracleSql.dotSql(a, b)
-  private def cosSql(a: String, b: String): String = OracleSql.cosSql(a, b)
-  private def l2Sql(a: String, b: String): String = OracleSql.l2Sql(a, b)
+  import OracleSql.{cosSql, dotSql, l2Sql}
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- V5 parity: top-k similar to one vector, payload joined ----

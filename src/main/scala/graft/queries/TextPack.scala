@@ -24,19 +24,8 @@ object TextPack extends QueryPack {
   private def shingleSql(tk: String): String =
     s"""CASE WHEN len($tk) <= 3 THEN [array_to_string($tk, ' ')]
        | ELSE list_transform(range(1, len($tk) - 1), i -> array_to_string(($tk)[i:i+2], ' ')) END""".stripMargin
-  private def jaccardSql(a: String, b: String): String =
-    s"ROUND(CASE WHEN len($a) = 0 OR len($b) = 0 THEN 0.0 ELSE len(list_intersect($a, $b))::DOUBLE / len(list_distinct(list_concat($a, $b)))::DOUBLE END, 6)"
-  // vector fragments: the ONE shared spelling (OracleSql)
-  private def cosSql(a: String, b: String): String = OracleSql.cosSql(a, b)
-  /** Parse the first 15 hex chars of md5 into a BIGINT, mod 2^31-1 —
-    * mirrors TextFunctions.md5Long bit-for-bit.
-    */
-  private def md5LongSql(e: String): String =
-    s"(list_reduce(list_prepend(0::BIGINT, list_transform(string_split(substr(md5($e), 1, 15), ''), c -> strpos('0123456789abcdef', c)::BIGINT - 1)), (a, b) -> a * 16 + b) % 2147483647)"
-  private def minhashSql(ss: String, k: Int): String =
-    s"list_transform(range(0, $k), i -> coalesce(list_min(list_transform($ss, t -> ((i * 2 + 1) * ${md5LongSql("t")} + (i * i + 98765)) % 2147483647)), 2147483647))"
-  private def bandsSql(sig: String, bands: Int, rowsPer: Int): String =
-    s"list_transform(range(0, $bands), b -> b::VARCHAR || '|' || md5(array_to_string(($sig)[b*$rowsPer+1:b*$rowsPer+$rowsPer], ',')))"
+  // the ONE shared spelling of the vector and hashing fragments
+  import OracleSql.{bandsSql, cosSql, jaccardSql, md5LongSql, minhashSql}
   private def polyhashSql(e: String): String =
     s"list_reduce(list_prepend(0::BIGINT, list_transform(list_filter(string_split($e, ''), c -> c <> ''), c -> ascii(c)::BIGINT)), (a, b) -> (a * 31 + b) % 1000000007)"
   private def fingerprintSql(tk: String): String =

@@ -25,17 +25,8 @@ object TrainPack extends QueryPack {
     s"""CASE WHEN len($tk) <= $n THEN [array_to_string($tk, ' ')]
        | ELSE list_transform(range(1, len($tk) - ${n - 2}), i -> array_to_string(($tk)[i:i+${n - 1}], ' ')) END"""
       .stripMargin.replace("\n", " ")
-  private def minhashSql(ss: String, k: Int): String =
-    s"list_transform(range(0, $k), i -> coalesce(list_min(list_transform($ss, t -> ((i * 2 + 1) * ${md5LongSql("t")} + (i * i + 98765)) % 2147483647)), 2147483647))"
-  private def bandsSql(sig: String, bands: Int, rowsPer: Int): String =
-    s"list_transform(range(0, $bands), b -> b::VARCHAR || '|' || md5(array_to_string(($sig)[b*$rowsPer+1:b*$rowsPer+$rowsPer], ',')))"
-  private def jaccardSql(a: String, b: String): String =
-    s"ROUND(CASE WHEN len($a) = 0 OR len($b) = 0 THEN 0.0 ELSE len(list_intersect($a, $b))::DOUBLE / len(list_distinct(list_concat($a, $b)))::DOUBLE END, 6)"
-  // vector fragments: the ONE shared spelling (OracleSql)
-  private def cosSql(a: String, b: String): String = OracleSql.cosSql(a, b)
-  private def l2Sql(a: String, b: String): String = OracleSql.l2Sql(a, b)
-  private def md5LongSql(e: String): String =
-    s"(list_reduce(list_prepend(0::BIGINT, list_transform(string_split(substr(md5($e), 1, 15), ''), c -> strpos('0123456789abcdef', c)::BIGINT - 1)), (a, b) -> a * 16 + b) % 2147483647)"
+  // the ONE shared spelling of the vector and hashing fragments
+  import OracleSql.{bandsSql, cosSql, jaccardSql, l2Sql, md5LongSql, minhashSql}
 
   /** Shared CTE chain replaying `Corpus.dsirWeights` (hashed 1+2-gram
     * buckets, add-one-smoothed target/raw log-ratio in nano-nat units)

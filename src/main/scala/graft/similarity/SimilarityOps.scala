@@ -1225,11 +1225,17 @@ object SimilarityOps {
     * scheduling change: each thunk is self-contained, results come
     * back in input order, and every job still runs to completion
     * before this returns (so plan build stays deterministic).
+    *
+    * If an arm throws, the jobs of the other arms are cancelled (every
+    * arm tags its jobs with one tag unique to this call), every arm is
+    * waited for, and the first error is rethrown: no arm outlives the
+    * call to run jobs beside the caller's next work.
     */
   private[graft] def concurrently(sess: org.apache.spark.sql.SparkSession,
                                   thunks: Seq[() => DataFrame]): Seq[DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.duration._
+    import scala.util.{Failure, Success, Try}
     implicit val ec: ExecutionContext = ExecutionContext.global
     // job group / description / pool are THREAD-LOCAL: global-pool
     // worker threads only inherit them at thread CREATION and keep
@@ -1237,26 +1243,39 @@ object SimilarityOps {
     // group (cancelJobGroup and listener attribution then miss them —
     // r12 ADVICE). Capture the caller's values and pin them (and the
     // active session, for SQLConf lookups) inside each Future; clear
-    // the session after the thunk so a reused pool thread doesn't
-    // carry a stale (possibly stopped) session into unrelated work.
+    // the session and the tag after the thunk so a reused pool thread
+    // doesn't carry them into unrelated work.
     val sc = sess.sparkContext
-    val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-    val props = propKeys.map(k => k -> sc.getLocalProperty(k))
+    val props = (graft.SparkWork.JobGroupProps :+ "spark.scheduler.pool")
+      .map(k => k -> sc.getLocalProperty(k))
+    val tag = s"graft-concurrently-${java.util.UUID.randomUUID()}"
     val fs = thunks.map { t =>
       Future {
         try {
           org.apache.spark.sql.SparkSession.setActiveSession(sess)
           props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          sc.addJobTag(tag)
           t()
         } finally {
+          sc.removeJobTag(tag)
           org.apache.spark.sql.SparkSession.clearActiveSession()
         }
       }
     }
     // fail fast on the first errored arm (awaiting arms in input order
-    // would keep later arms running as orphans before propagating)
-    Await.result(Future.sequence(fs), Duration.Inf)
+    // would let later arms run on before the error is seen)
+    Try(Await.result(Future.sequence(fs), Duration.Inf)) match {
+      case Success(dfs) => dfs
+      case Failure(e) =>
+        // cancel again every 50 ms until every arm has ended: a job an
+        // arm submits after one cancel is caught by the next
+        val ended = Future.sequence(fs.map(_.transform(Success(_))))
+        while (!ended.isCompleted) {
+          sc.cancelJobsWithTag(tag, "a sibling arm of concurrently failed")
+          Try(Await.ready(ended, 50.millis))
+        }
+        throw e
+    }
   }
 
   /** Batch IVF-PQ serving — [[ivfPqTopK]] for a query SET (the shape a

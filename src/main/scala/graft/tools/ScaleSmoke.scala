@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
+import graft.SparkWork
 
 /** Opt-in scale smoke (not part of the driver contract): runs the eight
   * pipelines the 100 TB claim rests on — q74's LSH candidate graph →
@@ -86,15 +86,7 @@ object ScaleSmoke {
     def enabled(name: String): Boolean = only.isEmpty || only(name)
     val spark = graft.Graft.localSession(32)
 
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val peakTaskMem = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        shuffleWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        peakTaskMem.getAndAccumulate(
-          sc.stageInfo.taskMetrics.peakExecutionMemory, math.max(_, _))
-      }
-    })
+    val work = new SparkWork(spark.sparkContext)
 
     val vectorSections =
       Seq("cc", "pagerank", "kmeans", "lpa", "pq_adc", "ivfpq")
@@ -157,20 +149,13 @@ object ScaleSmoke {
       else s"scale_smoke$suffix.json")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("artifacts"))
 
-    // stage-completed events arrive on the async listener bus AFTER the
-    // action returns — poll the counter to stability before taking a
-    // section's delta, or late events of one section land in the next
-    def settleShuffle(): Long = {
-      var prev = -1L
-      var cur = shuffleWrite.get
-      while (cur != prev) { Thread.sleep(300); prev = cur; cur = shuffleWrite.get }
-      cur
-    }
-    def timed[A](f: => A): (A, Double, Long) = {
-      val s0 = settleShuffle()
-      val t0 = System.nanoTime(); val a = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      (a, dt, settleShuffle() - s0)
+    // each section runs in its own job group; the run totals add every
+    // section's work to the ungrouped set-up work (replica builds, counts)
+    var sectionsWork = SparkWork.Work()
+    def measure[A](section: String)(f: => A): (A, Double, SparkWork.Work) = {
+      val r = work.measure(section)(f)
+      sectionsWork += r._3
+      r
     }
     // full-materialization forcing for report/decision-table plans:
     // `df.count()` lets Catalyst ELIMINATE cardinality-preserving outer
@@ -188,7 +173,7 @@ object ScaleSmoke {
     // vertices — a nonzero violation count means the loop stopped short
     // and the run fails loudly ---
     if (enabled("cc")) {
-      val ((ccRows, ccViol, ccRounds), ccSec, ccShuf) = timed {
+      val ((ccRows, ccViol, ccRounds), ccSec, ccW) = measure("cc") {
         val pairs = graft.similarity.SimilarityOps.lshCandidatePairs(
             embN, "vec_id", "embedding", threshold = 0.4,
             bands = 3, bitsPerBand = bitsPerBand)
@@ -212,13 +197,13 @@ object ScaleSmoke {
       }
       require(ccViol == 0L,
         s"CC did NOT reach a fixed point: $ccViol cross-component edges")
-      fields += s""""cc_rows":$ccRows,"cc_label_violations":$ccViol,"cc_rounds":$ccRounds,"cc_sec":${f"$ccSec%.2f"},"cc_shuffle_bytes":$ccShuf"""
+      fields += s""""cc_rows":$ccRows,"cc_label_violations":$ccViol,"cc_rounds":$ccRounds,"cc_sec":${f"$ccSec%.2f"},"cc_shuffle_bytes":${ccW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
     // --- q98 shape: 3-iteration integer PageRank over the same graph ---
     if (enabled("pagerank")) {
-      val (prRows, prSec, prShuf) = timed {
+      val (prRows, prSec, prW) = measure("pagerank") {
       val pairs = graft.similarity.SimilarityOps.lshCandidatePairs(
         embN, "vec_id", "embedding", threshold = 0.4,
         bands = 3, bitsPerBand = bitsPerBand)
@@ -230,7 +215,7 @@ object ScaleSmoke {
         graft.graph.PageRank.run(embN.select("vec_id"), sym.toDF("src", "dst"),
           iters = 3, scale = 1000000L).count()
       }
-      fields += s""""pagerank_rows":$prRows,"pagerank_sec":${f"$prSec%.2f"},"pagerank_shuffle_bytes":$prShuf"""
+      fields += s""""pagerank_rows":$prRows,"pagerank_sec":${f"$prSec%.2f"},"pagerank_shuffle_bytes":${prW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -238,11 +223,11 @@ object ScaleSmoke {
     // scan × broadcast-k E-step + a (centroid, pos)-keyed partial-sum
     // shuffle of k×d rows — cost linear in n, model size constant ---
     if (enabled("kmeans")) {
-      val (kmRows, kmSec, kmShuf) = timed {
+      val (kmRows, kmSec, kmW) = measure("kmeans") {
         graft.similarity.SimilarityOps.kmeansFit(
           embN, "vec_id", "embedding", k = 256, iters = 2).count()
       }
-      fields += s""""kmeans_rows":$kmRows,"kmeans_sec":${f"$kmSec%.2f"},"kmeans_shuffle_bytes":$kmShuf"""
+      fields += s""""kmeans_rows":$kmRows,"kmeans_sec":${f"$kmSec%.2f"},"kmeans_shuffle_bytes":${kmW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -251,7 +236,7 @@ object ScaleSmoke {
     // packed-argmax HashAggregate; the loop shuffle carries only
     // (id, label) pairs ---
     if (enabled("lpa")) {
-      val (lpRows, lpSec, lpShuf) = timed {
+      val (lpRows, lpSec, lpW) = measure("lpa") {
         val pairs = graft.similarity.SimilarityOps.lshCandidatePairs(
           embN, "vec_id", "embedding", threshold = 0.4,
           bands = 3, bitsPerBand = bitsPerBand)
@@ -262,7 +247,7 @@ object ScaleSmoke {
           embN.select(col("vec_id").as("id")), sym.toDF("src", "dst"),
           iters = 2).count()
       }
-      fields += s""""lpa_rows":$lpRows,"lpa_sec":${f"$lpSec%.2f"},"lpa_shuffle_bytes":$lpShuf"""
+      fields += s""""lpa_rows":$lpRows,"lpa_sec":${f"$lpSec%.2f"},"lpa_shuffle_bytes":${lpW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -291,11 +276,11 @@ object ScaleSmoke {
       (col("doc_id") + lit(copies.toLong * d0)).as("doc_id"),
       concat(col("text"), lit(" smokebatch")).as("text"))
     if (enabled("dedup")) {
-      val (ddRows, ddSec, ddShuf) = timed {
+      val (ddRows, ddSec, ddW) = measure("dedup") {
         forceAll(graft.pipeline.Dedup.crossCorpusDedupLsh(
           corpusN, batch, "doc_id", "text"))
       }
-      fields += s""""dedup_rows":$ddRows,"dedup_sec":${f"$ddSec%.2f"},"dedup_shuffle_bytes":$ddShuf"""
+      fields += s""""dedup_rows":$ddRows,"dedup_sec":${f"$ddSec%.2f"},"dedup_shuffle_bytes":${ddW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -346,12 +331,12 @@ object ScaleSmoke {
     // equi-join on (sub, code) + integer sums, so cost is one pass over
     // codes regardless of dimensionality ---
     if (enabled("pq_adc")) {
-      val (pqRows, pqSec, pqShuf) = timed {
+      val (pqRows, pqSec, pqW) = measure("pq_adc") {
         graft.similarity.SimilarityOps.pqAdcTopK(
           embN, "vec_id", "embedding", queryId = 0L,
           m = 8, nCodes = 256, k = 10).count()
       }
-      fields += s""""pq_adc_rows":$pqRows,"pq_adc_sec":${f"$pqSec%.2f"},"pq_adc_shuffle_bytes":$pqShuf"""
+      fields += s""""pq_adc_rows":$pqRows,"pq_adc_sec":${f"$pqSec%.2f"},"pq_adc_shuffle_bytes":${pqW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -367,7 +352,7 @@ object ScaleSmoke {
       val nCents = 256
       val ixDir = java.nio.file.Files
         .createTempDirectory("ivfpq_idx").toString
-      val (ixRows, ixSec, ixShuf) = timed {
+      val (ixRows, ixSec, ixW) = measure("ivfpq_index") {
         graft.similarity.SimilarityOps.ivfPqIndex(
             embN, "vec_id", "embedding", nCentroids = nCents, m = 8,
             nCodes = 16)
@@ -383,7 +368,7 @@ object ScaleSmoke {
           else Option(f.listFiles).map(_.map(du).sum).getOrElse(0L)
         du(new java.io.File(ixDir))
       }
-      fields += s""""ivfpq_index_rows":$ixRows,"ivfpq_index_sec":${f"$ixSec%.2f"},"ivfpq_index_shuffle_bytes":$ixShuf,"ivfpq_index_disk_bytes":$ixBytes"""
+      fields += s""""ivfpq_index_rows":$ixRows,"ivfpq_index_sec":${f"$ixSec%.2f"},"ivfpq_index_shuffle_bytes":${ixW.shuffleWriteBytes},"ivfpq_index_disk_bytes":$ixBytes"""
       flushPartial(outFile)
       val idx = spark.read.parquet(ixDir)
       // the serve plan's QUERY side (batch vectors, ≤nCents centroid
@@ -398,13 +383,13 @@ object ScaleSmoke {
       val qside = embN.filter(col("vec_id") < math.max(nCents, 64))
         .localCheckpoint(true)
       for (p <- Seq(1, 4)) {
-        val (svRows, svSec, svShuf) = timed {
+        val (svRows, svSec, svW) = measure(s"ivfpq_serve$p") {
           forceAll(graft.similarity.SimilarityOps.ivfPqBatchTopKIndexed(
             idx, qside, "vec_id", "embedding",
             queryPred = col("vec_id") < 64,
             nCentroids = nCents, m = 8, nCodes = 16, k = 10, nprobe = p))
         }
-        fields += s""""ivfpq_serve${p}_rows":$svRows,"ivfpq_serve${p}_sec":${f"$svSec%.2f"},"ivfpq_serve${p}_shuffle_bytes":$svShuf"""
+        fields += s""""ivfpq_serve${p}_rows":$svRows,"ivfpq_serve${p}_sec":${f"$svSec%.2f"},"ivfpq_serve${p}_shuffle_bytes":${svW.shuffleWriteBytes}"""
         flushPartial(outFile)
       }
       qside.unpersist(blocking = false)
@@ -421,7 +406,7 @@ object ScaleSmoke {
       val chunkBits = graft.similarity.SimilarityOps.naturalBits(
         nCorpus, targetOccupancy = 16.0, floor = 6, cap = 60 / chunks)
       val shBits = chunks * chunkBits
-      val ((shCand, shPairs), shSec, shShuf) = timed {
+      val ((shCand, shPairs), shSec, shW) = measure("simhash") {
         val sh = graft.pipeline.Dedup.simhashTable(
           corpusSim, "doc_id", "text", bits = shBits).cache()
         val mask = (1L << chunkBits) - 1
@@ -439,7 +424,7 @@ object ScaleSmoke {
         sh.unpersist(blocking = false)
         (cand, pairs)
       }
-      fields += s""""simhash_bits":$shBits,"simhash_candidates":$shCand,"simhash_rows":$shPairs,"simhash_sec":${f"$shSec%.2f"},"simhash_shuffle_bytes":$shShuf"""
+      fields += s""""simhash_bits":$shBits,"simhash_candidates":$shCand,"simhash_rows":$shPairs,"simhash_sec":${f"$shSec%.2f"},"simhash_shuffle_bytes":${shW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -451,7 +436,7 @@ object ScaleSmoke {
     if (enabled("simhashwide")) {
       val words = 4
       val bpw = 60
-      val ((swCand, swPairs), swSec, swShuf) = timed {
+      val ((swCand, swPairs), swSec, swW) = measure("simhashwide") {
         val sh = graft.pipeline.Dedup.simhashTableWide(
           corpusSim, "doc_id", "text", words, bpw).cache()
         val cand = sh.select(posexplode(col("simhash")).as(Seq("wi", "wv")))
@@ -463,7 +448,7 @@ object ScaleSmoke {
         sh.unpersist(blocking = false)
         (cand, pairs)
       }
-      fields += s""""simhashwide_words":$words,"simhashwide_candidates":$swCand,"simhashwide_rows":$swPairs,"simhashwide_sec":${f"$swSec%.2f"},"simhashwide_shuffle_bytes":$swShuf"""
+      fields += s""""simhashwide_words":$words,"simhashwide_candidates":$swCand,"simhashwide_rows":$swPairs,"simhashwide_sec":${f"$swSec%.2f"},"simhashwide_shuffle_bytes":${swW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -473,12 +458,12 @@ object ScaleSmoke {
     // `copies` grows; the probe side (all replicas) grows with copies
     // but is pure map-side bit tests ---
     if (enabled("bloom")) {
-      val (blRows, blSec, blShuf) = timed {
+      val (blRows, blSec, blW) = measure("bloom") {
         graft.pipeline.Corpus.bloomDecontaminate(
           corpusN.unionByName(batch), "doc_id", "text",
           evalPred = col("doc_id") < d0, bits = 1 << 22).count()
       }
-      fields += s""""bloom_rows":$blRows,"bloom_sec":${f"$blSec%.2f"},"bloom_shuffle_bytes":$blShuf"""
+      fields += s""""bloom_rows":$blRows,"bloom_sec":${f"$blSec%.2f"},"bloom_shuffle_bytes":${blW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
     // bloom is the last consumer of the verbatim-replica cache
@@ -500,11 +485,11 @@ object ScaleSmoke {
         cust.select((col("c_custkey") + lit(c.toLong * c0)).as("c_custkey"),
           concat(lit(f"$c%03d-"), col("c_name")).as("c_name"))
       }.reduce(_ unionAll _)
-      val (edRows, edSec, edShuf) = timed {
+      val (edRows, edSec, edW) = measure("editdist") {
         graft.pipeline.Dedup.editDistancePairs(custN, "c_custkey", "c_name")
           .count()
       }
-      fields += s""""editdist_rows":$edRows,"editdist_sec":${f"$edSec%.2f"},"editdist_shuffle_bytes":$edShuf"""
+      fields += s""""editdist_rows":$edRows,"editdist_sec":${f"$edSec%.2f"},"editdist_shuffle_bytes":${edW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -520,11 +505,11 @@ object ScaleSmoke {
         regexp_replace(col("text"), "(\\S+)", s"c${c}_$$1").as("text"))
     }.reduce(_ unionAll _)
     if (enabled("tfidfcos")) {
-      val (tcRows, tcSec, tcShuf) = timed {
+      val (tcRows, tcSec, tcW) = measure("tfidfcos") {
         graft.pipeline.Corpus.tfidfCosinePairs(
           corpusTagged, "doc_id", "text", n = 3, threshold = 0.5).count()
       }
-      fields += s""""tfidfcos_rows":$tcRows,"tfidfcos_sec":${f"$tcSec%.2f"},"tfidfcos_shuffle_bytes":$tcShuf"""
+      fields += s""""tfidfcos_rows":$tcRows,"tfidfcos_sec":${f"$tcSec%.2f"},"tfidfcos_shuffle_bytes":${tcW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -549,7 +534,7 @@ object ScaleSmoke {
           .select((col("doc_id") + lit((copies.toLong + 1) * d0)).as("doc_id"),
             col("text")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (cuRows, cuSec, cuShuf) = timed {
+      val (cuRows, cuSec, cuW) = measure("curation") {
         val exact = curInput.groupBy(md5(col("text")).as("__h"))
           .agg(min(col("doc_id")).as("__keeper"))
         val near = graft.pipeline.Dedup.minhashLshPairs(curInput,
@@ -564,7 +549,7 @@ object ScaleSmoke {
             (length(col("text")) < 100).as("too_short")))
       }
       curInput.unpersist(blocking = true)
-      fields += s""""curation_rows":$cuRows,"curation_sec":${f"$cuSec%.2f"},"curation_shuffle_bytes":$cuShuf"""
+      fields += s""""curation_rows":$cuRows,"curation_sec":${f"$cuSec%.2f"},"curation_shuffle_bytes":${cuW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -580,11 +565,11 @@ object ScaleSmoke {
         .select((col("doc_id") + lit(copies.toLong * d0)).as("doc_id"),
           col("text"))
       val input = corpusTagged.unionAll(evalSlice)
-      val (ctRows, ctSec, ctShuf) = timed {
+      val (ctRows, ctSec, ctW) = measure("contamination") {
         forceAll(graft.pipeline.Corpus.evalOverlapReport(input, "doc_id",
           "text", evalPred = col("doc_id") >= copies.toLong * d0, n = 13))
       }
-      fields += s""""contamination_rows":$ctRows,"contamination_sec":${f"$ctSec%.2f"},"contamination_shuffle_bytes":$ctShuf"""
+      fields += s""""contamination_rows":$ctRows,"contamination_sec":${f"$ctSec%.2f"},"contamination_shuffle_bytes":${ctW.shuffleWriteBytes}"""
       flushPartial(outFile)
     }
 
@@ -623,22 +608,24 @@ object ScaleSmoke {
       val blobN = (0 until copies).map(c => blobs(c, c.toLong * d0))
         .reduce(_ unionAll _)
         .unionAll(blobs(0, copies.toLong * d0)) // exact twins of copy 0
-      val (bnRows, bnSec, bnShuf) = timed {
+      val (bnRows, bnSec, bnW) = measure("binarydedup") {
         forceAll(graft.pipeline.Dedup.binaryNearDupPairs(
           blobN, "doc_id", "bin", bins = 64, threshold = 0.999,
           bands = 3, bitsPerBand = blobBits))
       }
-      fields += s""""binarydedup_rows":$bnRows,"binarydedup_sec":${f"$bnSec%.2f"},"binarydedup_shuffle_bytes":$bnShuf,"binarydedup_bits":$blobBits"""
+      fields += s""""binarydedup_rows":$bnRows,"binarydedup_sec":${f"$bnSec%.2f"},"binarydedup_shuffle_bytes":${bnW.shuffleWriteBytes},"binarydedup_bits":$blobBits"""
       flushPartial(outFile)
     }
 
+    val runWork = sectionsWork + work.take("")
+    work.close()
     val json =
       s"""{"metric":"scale_smoke","sf_dir":"$sfDir","mode":"$mode","copies":$copies,""" +
         s""""sections":"${if (only.isEmpty) "all" else only.toSeq.sorted.mkString("+")}",""" +
         s""""n_vectors":$n,"n_corpus_docs":$nCorpus,"bits_per_band":$bitsPerBand,""" +
         fields.map(_ + ",").mkString +
-        s""""shuffle_write_bytes":${shuffleWrite.get},""" +
-        s""""peak_task_memory_bytes":${peakTaskMem.get}}"""
+        s""""shuffle_write_bytes":${runWork.shuffleWriteBytes},""" +
+        s""""peak_task_memory_bytes":${runWork.peakExecMemBytes}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (json + "\n").getBytes("UTF-8"))
     // the final artifact supersedes the sidecar — remove it so a

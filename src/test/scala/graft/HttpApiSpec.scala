@@ -2,13 +2,10 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
 import graft.api.{HttpApiServer, Multipart, WhisperApi}
@@ -509,37 +506,11 @@ class HttpApiSpec extends SparkSpec {
     // (handler threads carry no job group); a re-added existence probe
     // or a second read of the node changes a count here
     val api = nativeApi(nativeSnapshot())
-    val sc = spark.sparkContext
-    val started = new AtomicInteger(0)
-    val sentinelsDone = ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      private val sentinels = new ConcurrentHashMap[Int, String]()
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")
-        if (g.startsWith("http-sentinel-")) sentinels.put(js.jobId, g)
-        else started.incrementAndGet()
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        Option(sentinels.remove(je.jobId)).foreach(sentinelsDone.add)
-    }
-    var sentinel = 0
+    val work = new SparkWork(spark.sparkContext)
     /** Jobs started since the last call, once the listener bus has
-      * delivered them (a sentinel job's end orders the bus).
+      * delivered them (handler threads carry no job group).
       */
-    def jobsSinceLast(): Int = {
-      sentinel += 1
-      val g = s"http-sentinel-$sentinel"
-      sc.setJobGroup(g, "sentinel")
-      spark.range(1).collect()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!sentinelsDone.contains(g) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(sentinelsDone.contains(g), s"listener-bus sentinel $g not observed within 60s")
-      started.getAndSet(0)
-    }
-    sc.addSparkListener(listener)
+    def jobsSinceLast(): Int = work.take("").jobs
     try serve(api) { base =>
       jobsSinceLast()
       def jobs(method: String, path: String, body: String = ""): Int = {
@@ -556,7 +527,7 @@ class HttpApiSpec extends SparkSpec {
         "similar after writes" -> jobs("GET", "/api/nodes/2/similar?limit=5"))
       assert(counts == Seq("GET" -> 2, "similar" -> 2, "PUT" -> 2, "DELETE" -> 1,
         "GET after writes" -> 2, "similar after writes" -> 2))
-    } finally sc.removeSparkListener(listener)
+    } finally work.close()
   }
 
   test("stop() ends every handler thread of the server") {

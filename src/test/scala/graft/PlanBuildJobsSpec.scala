@@ -1,11 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.functions._
-
 /** Closes the recurring "eager driver action at plan-build time" defect
   * class (r5: tfidfTags, r6: clusterLabels — the same idiom two
   * functions apart). Building a query's DataFrame must not RUN anything:
@@ -21,11 +15,10 @@ import org.apache.spark.sql.functions._
   * bounds / quantile edges).
   *
   * Attribution is race-free under sbt's parallel suites: each plan
-  * build runs inside a thread-local job group (`pbq-<name>`), so only
-  * jobs submitted BY that build are counted; a sentinel job
-  * (`pbs-<name>`) then acts as an ordering barrier on the listener bus
-  * — once its END event is observed, every start the build triggered
-  * has been delivered.
+  * build runs inside a thread-local job group (`pbq-<name>`) measured by
+  * [[SparkWork]], so only jobs submitted BY that build are counted, and
+  * its sentinel-job barrier orders the listener bus before the count is
+  * read.
   */
 class PlanBuildJobsSpec extends SparkSpec {
 
@@ -157,41 +150,12 @@ class PlanBuildJobsSpec extends SparkSpec {
     // runs one footer/schema-inference job plus the spread probe —
     // one-time IO setup, memoized per session, not operator behavior
     Tables.all.foreach(t => Tables(spark, sf, t))
-    val startsByGroup = new ConcurrentHashMap[String, AtomicInteger]()
-    val endedSentinels = ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      private val sentinelJob = new ConcurrentHashMap[Int, String]()
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")
-        if (g.startsWith("pbs-")) sentinelJob.put(js.jobId, g)
-        else if (g.startsWith("pbq-"))
-          startsByGroup
-            .computeIfAbsent(g, _ => new AtomicInteger(0))
-            .incrementAndGet()
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        val g = sentinelJob.remove(je.jobId)
-        if (g != null) endedSentinels.add(g)
-      }
-    }
-    sc.addSparkListener(listener)
+    val work = new SparkWork(sc)
     try {
       val counts = SparkEntry.queries.toSeq.sortBy(_._1).map {
         case (name, fn) =>
-          sc.setJobGroup(s"pbq-$name", s"plan build: $name")
-          fn(spark, sf) // plan build ONLY — no action on the result
-          sc.setJobGroup(s"pbs-$name", s"sentinel: $name")
-          spark.range(1).count()
-          sc.clearJobGroup()
-          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-          while (!endedSentinels.contains(s"pbs-$name") &&
-              System.nanoTime() < deadline) Thread.sleep(5)
-          assert(endedSentinels.contains(s"pbs-$name"),
-            s"listener-bus sentinel for $name not observed within 60s")
-          val n = Option(startsByGroup.get(s"pbq-$name")).fold(0)(_.get())
-          name -> n
+          // plan build ONLY — no action on the result
+          name -> work.measure(s"pbq-$name")(fn(spark, sf))._3.jobs
       }
       val offenders = counts.filter { case (name, n) =>
         n > 0 && !allow.contains(name)
@@ -209,7 +173,7 @@ class PlanBuildJobsSpec extends SparkSpec {
       assert(inexact.isEmpty,
         s"graph-loop plan-build job counts moved: $inexact — a loop round " +
           "gained or lost a Spark action")
-    } finally sc.removeSparkListener(listener)
+    } finally work.close()
   }
 
   /** Unit-level pins for the two fixed operators: on in-memory inputs
@@ -219,40 +183,20 @@ class PlanBuildJobsSpec extends SparkSpec {
     */
   test("tfidfTags and clusterLabels build their plans with zero jobs") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val started = new AtomicInteger(0)
-    val seen = ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      private val sentinelJob = new ConcurrentHashMap[Int, String]()
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")
-        if (g == "pbu-sentinel") sentinelJob.put(js.jobId, g)
-        else if (g == "pbu-unit") started.incrementAndGet()
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (sentinelJob.remove(je.jobId) != null) seen.add("done")
-    }
-    sc.addSparkListener(listener)
+    val work = new SparkWork(spark.sparkContext)
     try {
       val docs = Seq((1L, "alpha beta gamma"), (2L, "alpha beta delta"),
         (3L, "epsilon zeta")).toDF("doc_id", "text")
       val clusters = Seq((1L, 1L), (2L, 1L), (3L, 3L))
         .toDF("id", "component")
-      sc.setJobGroup("pbu-unit", "unit plan build")
-      graft.pipeline.Corpus.tfidfTags(docs, "doc_id", "text", 3)
-      graft.pipeline.Corpus.clusterLabels(docs, "doc_id", "text",
-        clusters, 3)
-      sc.setJobGroup("pbu-sentinel", "sentinel")
-      spark.range(1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains("done") && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(started.get() == 0,
+      val (_, _, unit) = work.measure("pbu-unit") {
+        graft.pipeline.Corpus.tfidfTags(docs, "doc_id", "text", 3)
+        graft.pipeline.Corpus.clusterLabels(docs, "doc_id", "text",
+          clusters, 3)
+      }
+      assert(unit.jobs == 0,
         "tfidfTags/clusterLabels ran a job during plan build — the " +
           "eager corpus count is back (r5/r6 finding)")
-    } finally sc.removeSparkListener(listener)
+    } finally work.close()
   }
 }

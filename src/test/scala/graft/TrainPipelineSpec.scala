@@ -1221,4 +1221,29 @@ class TrainPipelineSpec extends SparkSpec {
     assert(back1 == ch1 && back2 == ch2,
       "JSONL round-trip preserves the packed-chunk count")
   }
+
+  test("concurrently: a failing arm cancels its sibling's jobs, waits for " +
+       "every arm, and rethrows the first error") {
+    val sc = spark.sparkContext
+    val slowArmEnded = new java.util.concurrent.CountDownLatch(1)
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      SimilarityOps.concurrently(spark, Seq(
+        () => throw new IllegalStateException("arm failed"),
+        () => try {
+          // a job that runs for 60 s unless its tasks are killed
+          sc.parallelize(1 to 2, 2).map { i =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val end = System.nanoTime() + 60L * 1000 * 1000 * 1000
+            while (!ctx.isInterrupted() && System.nanoTime() < end) Thread.sleep(10)
+            i
+          }.count()
+          spark.range(1).toDF()
+        } finally slowArmEnded.countDown()))
+    }
+    assert(err.getMessage == "arm failed")
+    assert(slowArmEnded.getCount == 0,
+      "the sibling arm was still running its job after concurrently returned")
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the sibling's job was not cancelled")
+  }
 }
