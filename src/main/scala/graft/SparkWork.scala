@@ -49,10 +49,15 @@ final class SparkWork(sc: SparkContext) extends SparkListener with AutoCloseable
         shuffleReadBytes = m.fold(0L)(_.shuffleReadMetrics.totalBytesRead),
         shuffleWriteBytes = m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
         spillBytes = m.fold(0L)(t => t.memoryBytesSpilled + t.diskBytesSpilled),
-        peakExecMemBytes = m.fold(0L)(_.peakExecutionMemory),
         singleTaskStageMs = singleMs), _ + _)
     }
   }
+
+  // a stage's peakExecutionMemory is the sum over its tasks; one task's
+  // peak is only seen here
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    for (g <- Option(stageGroup.get(e.stageId)); m <- Option(e.taskMetrics))
+      work.merge(g, Work(peakExecMemBytes = m.peakExecutionMemory), _ + _)
 
   /** Runs `body` in job group `group` and returns its result, its wall
     * seconds and the Spark work its jobs did. The caller's earlier job
@@ -108,8 +113,8 @@ object SparkWork {
     * (the same plan gives the same numbers); `singleTaskStageMs`, the
     * wall time of stages that ran a single task (serial work such as a
     * collect or a broadcast build), moves with host load.
-    * `peakExecMemBytes` is the largest stage's peak execution memory as
-    * Spark sums it over the stage's tasks.
+    * `peakExecMemBytes` is the largest peak execution memory of any one
+    * task.
     */
   final case class Work(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
                         shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0,

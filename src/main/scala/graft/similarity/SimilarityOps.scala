@@ -1,8 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorFunctions._
 
 /** Candidate-pair generation strategy for the similarity graph (V6/V7
@@ -141,7 +143,8 @@ object SimilarityOps {
 
   /** Packed-argmin assignment against an ARBITRARY centroid table
     * `cents` = (centroid: long in [0, 1024), __cvec: numeric array) —
-    * the general E-step `kmeansFit` iterates. Same plan shape as
+    * the trained IVF-PQ index assigns against [[kmeansCentroids]]' model
+    * here, with the E-step key `lloyd` mirrors. Same plan shape as
     * `assignToCentroids` (broadcast ≤1024-row build side, map-side
     * distance + packed-long HashAggregate argmin); the broadcast is
     * provably bounded by the 10-bit centroid-id pack.
@@ -288,11 +291,8 @@ object SimilarityOps {
     * form — (centroid, pos, avg_v, n_members) — the shape `q36`/`q75`
     * established for element-wise centroid output.
     *
-    * Scale: each round is one scan + broadcast-k E-step + (centroid,
-    * pos)-keyed HashAggregate with map-side partials — the shuffle
-    * carries k×d partial sums, never vectors. The k×d model DF is
-    * `localCheckpoint`ed per round (it is tiny) so plan lineage stays
-    * flat in `iters` and nothing upstream re-executes.
+    * The rounds run in [[lloyd]] (m = 1): one pass over the persisted
+    * points per round against a driver-resident k×d model.
     */
   def kmeansFit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                 iters: Int): DataFrame =
@@ -302,37 +302,119 @@ object SimilarityOps {
       .select(col("centroid"), (col("pos0") + 1).cast("int").as("pos"),
         col("avg_v"), col("n_members"))
 
-  /** [[kmeansFit]]'s loop returning the ASSEMBLED model — (centroid,
-    * __cvec: array<double>, n_members) — the form the trained IVF-PQ
-    * path consumes directly (assignment, probe shortlist); kmeansFit
-    * explodes it to the long contract shape. The returned DF is
-    * `localCheckpoint`ed by the final round.
+  /** [[kmeansFit]]'s model ASSEMBLED — (centroid, __cvec: array<double>,
+    * n_members) — the form the trained IVF-PQ path consumes directly
+    * (assignment, probe shortlist); kmeansFit explodes it to the long
+    * contract shape. The DataFrame is a local relation over the fitted
+    * model. The E-step key is `assignToGivenCentroids`' packed argmin:
+    * the 6-dp L2 distance in micro-units, centroid-id tiebreak.
     */
   def kmeansCentroids(emb: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int): DataFrame = {
-    require(k <= 1024, "packed argmin keeps centroid in 10 bits")
+    val model = lloyd(emb, idCol, vecCol, 1, k, iters)(d2 =>
+      roundHalfUp(roundHalfUp(math.sqrt(d2), 6) * 1e6, 0).toLong)
+    emb.sparkSession.createDataFrame(
+      java.util.Arrays.asList(
+        model.head.map(c => Row(c.code, c.vec.toSeq, c.members)): _*),
+      StructType.fromDDL("centroid long, __cvec array<double>, n_members long"))
+  }
+
+  /** Spark's `round(x, scale)` on a double — HALF_UP over the shortest
+    * decimal form of `x` — for driver-side arithmetic that must agree
+    * with the engine's rounding bit for bit.
+    */
+  private[graft] def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** One centroid of a [[lloyd]] model: its code, its position and its
+    * members in the last round (0 for a seed).
+    */
+  private final case class Centroid(code: Long, vec: Array[Double],
+                                    members: Long)
+
+  /** Lloyd's algorithm over `m` independent subspaces of ⌊d/m⌋ dims
+    * (trailing remainder dims dropped, the [[pqSubvectors]] rule) —
+    * the one loop [[kmeansCentroids]] (m = 1) and [[pqCodebookFit]]
+    * share. Each round is one Pregelix-style superstep: the model stays
+    * on the driver, and a round is one pass over the persisted points.
+    *
+    *  - The (id, vector) points are persisted once, rows with a null id
+    *    or vector skipped; one `collect` of the rows with id < k seeds
+    *    every subspace (the first-k rule every IVF/PQ operator shares).
+    *  - A round is one `treeAggregate` against the broadcast model: a
+    *    point's slice joins the centroid of least `key(d²) * 1024 +
+    *    code` (the SQL path's packed argmin; d² is the strict left fold
+    *    `VectorFunctions.sqDistance` computes, and a centroid of another
+    *    length is skipped, as its SQL distance is null), which sums the
+    *    slice and counts it.
+    *  - On the driver each mean becomes round(sum / count, 6); codes
+    *    with no members drop out.
+    *
+    * The points are released in `finally`. Centroids come back in code
+    * order per subspace.
+    */
+  private def lloyd(emb: DataFrame, idCol: String, vecCol: String, m: Int,
+                    k: Int, iters: Int)(key: Double => Long)
+      : Array[Array[Centroid]] = {
+    require(m > 0 && k > 0 && k <= 1024,
+      "packed argmin keeps the code in 10 bits")
     require(iters >= 1, "at least one Lloyd round")
-    var cents = emb.filter(col(idCol) < k)
-      .select(col(idCol).as("centroid"), col(vecCol).as("__cvec"),
-        lit(0L).as("n_members"))
-    for (_ <- 1 to iters) {
-      // one pass: posexplode members, (centroid, pos)-keyed mean; the
-      // per-(centroid, pos) row count IS the member count (each member
-      // contributes exactly one value per dimension)
-      val means = assignToGivenCentroids(emb, idCol, vecCol,
-          cents.select(col("centroid"), col("__cvec")))
-        .select(col("centroid"), posexplode(col(vecCol)).as(Seq("pos0", "v")))
-        .groupBy(col("centroid"), (col("pos0") + 1).cast("int").as("pos"))
-        .agg(round(avg(col("v").cast("double")), 6).as("avg_v"),
-          count(lit(1)).as("__cnt"))
-      cents = means
-        .groupBy(col("centroid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("avg_v")))),
-          s => s("avg_v")).as("__cvec"),
-          max(col("__cnt")).as("n_members"))
-        .localCheckpoint(true)
-    }
-    cents
+    val points = emb.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+      .select(col(idCol).cast("long"), toDouble(col(vecCol)))
+      .rdd.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val seed = points.filter(_._1 < k).collect().sortBy(_._1)
+      var model = Array.tabulate(m)(s => seed.map { case (id, v) =>
+        val len = v.length / m
+        Centroid(id, v.slice(s * len, (s + 1) * len), 0L)
+      })
+      for (_ <- 1 to iters) {
+        val bc = points.sparkContext.broadcast(model)
+        // per (subspace, centroid): the members' summed slices, then
+        // their count in the last slot
+        val sums = try points.treeAggregate(
+            model.map(_.map(c => new Array[Double](c.vec.length + 1))))(
+          (acc, p) => {
+            val len = p._2.length / m
+            for (s <- 0 until m) {
+              val cs = bc.value(s)
+              var best = -1
+              var bestKey = 0L
+              for (i <- cs.indices if cs(i).vec.length == len) {
+                var d2 = 0.0
+                for (j <- 0 until len) {
+                  val t = p._2(s * len + j) - cs(i).vec(j)
+                  d2 += t * t
+                }
+                val packed = key(d2) * 1024L + cs(i).code
+                if (best < 0 || packed < bestKey) { best = i; bestKey = packed }
+              }
+              if (best >= 0) {
+                val a = acc(s)(best)
+                for (j <- 0 until len) a(j) += p._2(s * len + j)
+                a(len) += 1
+              }
+            }
+            acc
+          },
+          (a, b) => {
+            for (s <- a.indices; i <- a(s).indices; j <- a(s)(i).indices)
+              a(s)(i)(j) += b(s)(i)(j)
+            a
+          })
+        finally bc.destroy()
+        model = Array.tabulate(m)(s => model(s).indices.toArray.collect {
+          case i if sums(s)(i).last > 0 =>
+            val n = sums(s)(i).last
+            Centroid(model(s)(i).code,
+              sums(s)(i).init.map(x => roundHalfUp(x / n, 6)), n.toLong)
+        })
+      }
+      model
+    } finally points.unpersist(blocking = false)
   }
 
   /** IVF search: probe only the query vector's centroid block, then
@@ -549,97 +631,24 @@ object SimilarityOps {
     * encoding-ladder measurement identified as the missing piece
     * (residual encoding showed no gain BECAUSE the codebooks were
     * seed-sampled first-n rows; Jégou et al. train them with k-means
-    * per subspace). ALL m subspaces train in ONE loop over the long
-    * form (id, sub, subvec): seed = the first `nCodes` rows' slices
-    * (the deterministic rule every PQ operator shares), then `iters`
-    * rounds of packed-argmin assignment (d2m micro-units, code
-    * tiebreak) → per-(sub, code, pos) 6-dp-rounded means. Every mean
-    * is exactly representable after rounding, so the whole fit is
-    * replayable cross-engine like [[kmeansFit]]; codes that lose all
-    * members drop out in both engines. Output (code, sub, __cbvec).
-    *
-    * Scale: the slice explode is map-side; each round is one broadcast
-    * m×nCodes join + two HashAggregates with map-side partials (the
-    * shuffle carries n×m assignment rows, then m×nCodes×subDim partial
-    * sums — never vectors pairwise). The per-round model is
-    * localCheckpoint'ed so lineage stays flat in `iters`.
+    * per subspace). All m subspaces train in ONE [[lloyd]] loop: seed =
+    * the first `nCodes` rows' slices (the deterministic rule every PQ
+    * operator shares), then `iters` rounds of packed-argmin assignment
+    * (d2m micro-units, code tiebreak — [[pqAssignGiven]]'s key) →
+    * per-(sub, code) 6-dp-rounded means. Every mean is exactly
+    * representable after rounding, so the whole fit is replayable
+    * cross-engine like [[kmeansFit]]; codes that lose all members drop
+    * out in both engines. Output (code, sub, __cbvec), a local relation
+    * over the fitted model.
     */
   def pqCodebookFit(emb: DataFrame, idCol: String, vecCol: String,
                     m: Int, nCodes: Int, iters: Int): DataFrame = {
-    require(m > 0 && nCodes > 0 && nCodes <= 1024,
-      "packed argmin keeps the code in 10 bits")
-    require(iters >= 1, "at least one Lloyd round")
-    // every round's E-step reads the slices; checkpoint once so the
-    // explode (and the upstream scan) doesn't re-run per round
-    val parts = pqSubvectors(emb, idCol, vecCol, m)
-      .select(col(idCol).as("__pid"), col("sub"), col("subvec"))
-      .localCheckpoint()
-    // widest subspace dimension — bounds the per-position mean columns
-    // of the single-aggregate M-step below (tiny job over the already-
-    // checkpointed slices, not a new plan-build scan)
-    val subDim = parts.agg(max(size(col("subvec")))).collect()(0).getInt(0)
-    var cb = parts.filter(col("__pid") < nCodes)
-      .select(col("__pid").cast("long").as("code"), col("sub"),
-        col("subvec").as("__cbvec"))
-    for (_ <- 1 to iters) {
-      // subvec is constant per (__pid, sub) group, so first() rides the
-      // packed-argmin HashAggregate deterministically — no join back
-      val assigned = parts.join(broadcast(cb), "sub")
-        .withColumn("__d2m",
-          round(sqDistance(col("subvec"), col("__cbvec")) * 1e6).cast("long"))
-        .withColumn("__enc", col("__d2m") * 1024L + col("code"))
-        .groupBy(col("__pid"), col("sub"))
-        .agg(min(col("__enc")).as("__enc"), first(col("subvec")).as("subvec"))
-        .select(col("sub"), col("__enc").bitwiseAND(lit(1023L)).as("code"),
-          col("subvec"))
-      // M-step in ONE aggregate (r13, guide §2): the old shape
-      // posexploded every assigned slice and ran TWO exchanges per
-      // round (groupBy(sub,code,pos) avg, then groupBy(sub,code)
-      // collect_list reassembly). Per-position means as subDim avg
-      // columns over element_at need no explode and one exchange;
-      // positions past a narrower subspace's dim average over all-null
-      // and are dropped by the null filter (within one sub every slice
-      // has the same length, so nulls are exactly the tail positions —
-      // assembly order matches the old array_sort(collect_list)).
-      val avgCols = (1 to subDim).map(k =>
-        avg(element_at(col("subvec"), k).cast("double")).as(s"__m$k"))
-      cb = assigned
-        .groupBy(col("sub"), col("code"))
-        .agg(avgCols.head, avgCols.tail: _*)
-        .select(col("sub"), col("code"),
-          filter(array((1 to subDim).map(k => round(col(s"__m$k"), 6)): _*),
-            x => x.isNotNull).as("__cbvec"))
-        .localCheckpoint(true)
-    }
-    cb.select(col("code"), col("sub"), col("__cbvec"))
-  }
-
-  /** [[ivfPqIndex]] with TRAINED quantizers — coarse centroids from
-    * `iters` Lloyd rounds ([[kmeansFit]]) and per-subspace codebooks
-    * from [[pqCodebookFit]] — closing the loop the r11 measurement
-    * opened (seed-sampled codebooks were why residual encoding showed
-    * no gain). Same output shape and serving plan as the seed index:
-    * 4-byte codes scanned, (sub, code) equi-joins, no per-candidate
-    * vector math.
-    */
-  def ivfPqIndexTrained(emb: DataFrame, idCol: String, vecCol: String,
-                        nCentroids: Int, m: Int = 8, nCodes: Int = 16,
-                        iters: Int = 2): DataFrame = {
-    // the coarse k-means fit and the PQ codebook fit are INDEPENDENT
-    // chains (codebooks train on raw subvectors, not residuals), each
-    // serialized internally by its per-round eager checkpoints — build
-    // them concurrently so the trained index pays max(kmeans, pqfit)
-    // instead of the sum (r13, guide §2.6; measured 1.2 s + 1.9 s
-    // serial at sf0.1)
-    val Seq(centsAll, cbAll) = concurrently(emb.sparkSession, Seq(
-      () => kmeansCentroids(emb, idCol, vecCol, nCentroids, iters),
-      () => pqCodebookFit(emb, idCol, vecCol, m, nCodes, iters)))
-    val cents = centsAll.select(col("centroid"), col("__cvec"))
-    val cb = cbAll
-    assignToGivenCentroids(emb, idCol, vecCol, cents)
-      .select(col(idCol), col("centroid"))
-      .join(pqAssignGiven(emb, idCol, vecCol, m, cb)
-        .select(col(idCol), col("sub"), col("code")), Seq(idCol))
+    val model = lloyd(emb, idCol, vecCol, m, nCodes, iters)(d2 =>
+      roundHalfUp(d2 * 1e6, 0).toLong)
+    emb.sparkSession.createDataFrame(
+      java.util.Arrays.asList(
+        (for (s <- model.indices; c <- model(s)) yield Row(c.code, s, c.vec.toSeq)): _*),
+      StructType.fromDDL("code long, sub int, __cbvec array<double>"))
   }
 
   /** Product-quantization encode: each vector compressed to one packed
@@ -912,7 +921,8 @@ object SimilarityOps {
 
   /** The ladder body over an EXPLICIT (coarse centroids, per-subspace
     * codebook, index) triple — shared by the seed-sampled
-    * [[ivfPqRecallLadder]] and the trained [[ivfPqRecallLadderTrained]]
+    * [[ivfPqRecallLadder]] and the trained ladder
+    * (`ivfPqRecallLadderTrainedShared`)
     * so the rung semantics (nested-prefix probe sets, one checkpointed
     * ADC pass, integer-permille recall) live exactly once.
     */
@@ -990,24 +1000,14 @@ object SimilarityOps {
           .as("recall_permille"))
   }
 
-  /** [[ivfPqRecallLadder]] over the TRAINED index: coarse centroids
-    * from `iters` Lloyd rounds, per-subspace codebooks from
+  /** [[ivfPqRecallLadder]] over the TRAINED index (the third arm of
+    * [[ivfPqEncodingLadder]]): coarse centroids from `iters` Lloyd
+    * rounds ([[kmeansCentroids]]), per-subspace codebooks from
     * [[pqCodebookFit]] — the measured answer to "does training the
     * quantizers buy recall at the same code budget" (r11 order sheet
-    * #2). Both trained models are localCheckpoint'ed so the ladder's
-    * assignment, probe shortlist, and LUT all read one materialized
-    * k×d / m×nCodes×subDim table.
+    * #2). Both models are local relations, so the ladder's assignment,
+    * probe shortlist and LUT read no materialized table.
     */
-  def ivfPqRecallLadderTrained(emb: DataFrame, idCol: String,
-                               vecCol: String, queryPred: Column,
-                               nCentroids: Int, m: Int = 8,
-                               nCodes: Int = 16, k: Int = 10,
-                               nprobes: Seq[Int] = Seq(1, 2, 4),
-                               iters: Int = 2): DataFrame =
-    ivfPqRecallLadderTrainedShared(emb, idCol, vecCol, queryPred,
-      nCentroids, m, nCodes, k, nprobes, iters,
-      exactTopK(emb, idCol, vecCol, queryPred, k))
-
   private def ivfPqRecallLadderTrainedShared(emb: DataFrame, idCol: String,
                                              vecCol: String,
                                              queryPred: Column,
@@ -1017,13 +1017,9 @@ object SimilarityOps {
                                              exact: DataFrame): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(p => p >= 1 && p <= nCentroids),
       "every nprobe must be in [1, nCentroids]")
-    // the coarse model and the subspace codebooks train on disjoint
-    // chains (each a Lloyd loop with per-round barriers) — fit them
-    // concurrently; the index build below is the join point
-    val Seq(centsFit, cb) = concurrently(emb.sparkSession, Seq(
-      () => kmeansCentroids(emb, idCol, vecCol, nCentroids, iters),
-      () => pqCodebookFit(emb, idCol, vecCol, m, nCodes, iters)))
-    val cents = centsFit.select(col("centroid"), col("__cvec"))
+    val cents = kmeansCentroids(emb, idCol, vecCol, nCentroids, iters)
+      .select(col("centroid"), col("__cvec"))
+    val cb = pqCodebookFit(emb, idCol, vecCol, m, nCodes, iters)
     val idx = assignToGivenCentroids(emb, idCol, vecCol, cents)
       .select(col(idCol), col("centroid"))
       .join(pqAssignGiven(emb, idCol, vecCol, m, cb)
@@ -1049,43 +1045,20 @@ object SimilarityOps {
         zip_with(col(vecCol), col("__cv"),
           (x, c) => x.cast("double") - c.cast("double")).as("__res"))
 
-  /** [[ivfPqIndex]] with RESIDUAL encoding — the standard IVFADC
-    * refinement: PQ codes are assigned over x − assigned-centroid
-    * instead of raw x, and the codebook is the first `nCodes` vectors'
-    * RESIDUALS (the same deterministic seed rule, shifted to residual
-    * space, so the oracle replays it). Same output shape and the same
-    * serving plan as the raw index — 4-byte codes scanned, (sub, code)
-    * equi-joins, no per-candidate vector math — only the LUT build
-    * changes (per probed centroid, see [[ivfPqRecallLadderResidual]]).
+  /** [[ivfPqRecallLadder]] over the RESIDUAL-encoded index (the second
+    * arm of [[ivfPqEncodingLadder]]) — the standard IVFADC refinement:
+    * PQ codes are assigned over x − assigned-centroid instead of raw x,
+    * and the codebook is the first `nCodes` vectors' RESIDUALS (the
+    * same deterministic seed rule, shifted to residual space, so the
+    * oracle replays it). The index has the raw index's shape and
+    * serving plan — 4-byte codes scanned, (sub, code) equi-joins. The
+    * one structural difference: ADC lookup tables are per (query,
+    * PROBED centroid) — the query's residual w.r.t. EACH probed cell,
+    * |queries| × nprobe × m × nCodes broadcast rows — because residual
+    * space is relative to the cell. Candidates still join on (centroid,
+    * sub, code) against 4-byte codes; no vector math per candidate at
+    * any rung (the PlanSpec-pinned serving shape).
     */
-  def ivfPqIndexResidual(emb: DataFrame, idCol: String, vecCol: String,
-                         nCentroids: Int, m: Int = 8,
-                         nCodes: Int = 16): DataFrame = {
-    val res = residualVectors(emb, idCol, vecCol, nCentroids)
-    res.select(col(idCol), col("centroid"))
-      .join(pqAssign(res.select(col(idCol), col("__res")), idCol, "__res",
-          m, nCodes,
-          cbSource = Some(res.select(col(idCol), col("__res")))),
-        Seq(idCol))
-  }
-
-  /** [[ivfPqRecallLadder]] over the residual-encoded index. The one
-    * structural difference: ADC lookup tables are per (query, PROBED
-    * centroid) — the query's residual w.r.t. EACH probed cell, |queries|
-    * × nprobe × m × nCodes broadcast rows — because residual space is
-    * relative to the cell. Candidates still join on (centroid, sub,
-    * code) against 4-byte codes; no vector math per candidate at any
-    * rung (the PlanSpec-pinned serving shape, unchanged).
-    */
-  def ivfPqRecallLadderResidual(emb: DataFrame, idCol: String,
-                                vecCol: String, queryPred: Column,
-                                nCentroids: Int, m: Int = 8,
-                                nCodes: Int = 16, k: Int = 10,
-                                nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame =
-    ivfPqRecallLadderResidualShared(emb, idCol, vecCol, queryPred,
-      nCentroids, m, nCodes, k, nprobes,
-      exactTopK(emb, idCol, vecCol, queryPred, k))
-
   private def ivfPqRecallLadderResidualShared(emb: DataFrame, idCol: String,
                                               vecCol: String,
                                               queryPred: Column,
@@ -1099,9 +1072,7 @@ object SimilarityOps {
     val maxP = nprobes.max
     // the residual table feeds the codebook, the index ASSIGNMENT and
     // the index CODES — materialize it once instead of re-deriving the
-    // centroid assignment + zip_with subtraction per consumer (the
-    // pre-r12 shape called residualVectors here AND inside
-    // ivfPqIndexResidual: two full assignment passes per ladder)
+    // centroid assignment + zip_with subtraction per consumer
     val res = residualVectors(emb, idCol, vecCol, nCentroids)
       .localCheckpoint()
     val idx = res.select(col(idCol), col("centroid"))
@@ -1189,7 +1160,7 @@ object SimilarityOps {
     // 2–3 identical batchTopK scans per ladder query)
     val exact = exactTopK(emb, idCol, vecCol, queryPred, k)
     // each arm's construction materializes its own barrier chain
-    // (scored-candidate checkpoint; residual table; Lloyd model rounds)
+    // (scored-candidate checkpoint; residual table; Lloyd rounds)
     // and the chains share NO state — submit them concurrently so the
     // ladder's wall clock is the slowest arm, not the sum of arms
     // (r12, guide §2: the serialized chains left the cluster idle

@@ -219,9 +219,11 @@ object ScaleSmoke {
       flushPartial(outFile)
     }
 
-    // --- q118 shape: 2-round Lloyd k-means fit. Each round is one
-    // scan × broadcast-k E-step + a (centroid, pos)-keyed partial-sum
-    // shuffle of k×d rows — cost linear in n, model size constant ---
+    // --- q118 shape: 2-round Lloyd k-means fit on the shared Lloyd
+    // kernel. The points are persisted once; each round is one
+    // treeAggregate of per-centroid sums and counts against the
+    // broadcast k×d model, so a round moves k×d partial sums, never
+    // vectors — cost linear in n, model size constant ---
     if (enabled("kmeans")) {
       val (kmRows, kmSec, kmW) = measure("kmeans") {
         graft.similarity.SimilarityOps.kmeansFit(

@@ -27,7 +27,8 @@ class PlanBuildJobsSpec extends SparkSpec {
   /** query → its documented eager seam. Anything NOT here must build
     * its plan without a single job. Grep anchors: Components loop
     * (`graph/Components.scala`), PageRank/HITS/LPA/SSSP/k-core/BFS/walk
-    * loops (`graph/`), k-means (`similarity/SimilarityOps.scala:256`),
+    * loops (`graph/`), the Lloyd kernel behind k-means and the PQ
+    * codebook fit (`SimilarityOps.lloyd`),
     * BPE training (`pipeline/Bpe.scala:108`), Dedup scale switch
     * (`pipeline/Dedup.scala:421`) and selection checkpoint
     * (`Dedup.scala:91`), Stats histogram bounds / quantile edges
@@ -63,19 +64,17 @@ class PlanBuildJobsSpec extends SparkSpec {
     "q135_kcore" -> "k-core peel loop",
     "q104_bfs_hops" -> "BFS frontier loop",
     "q150_walks" -> "random-walk step loop",
-    "q34_centroid_assign" -> "k-means lloyd loop",
-    "q75_kmeans_step" -> "k-means lloyd loop",
-    "q118_kmeans_fit" -> "k-means lloyd loop",
+    "q118_kmeans_fit" -> "Lloyd kernel: seed collect + one job per round",
     "q155_mutual_knn" -> "kNN edge checkpoint",
-    "q217_ann_recall" -> "IVF k-means loop",
+    "q217_ann_recall" -> "exact top-k localCheckpoint (annRecall)",
     "q247_ivfpq_recall" -> "exact top-k localCheckpoint (q217's sibling)",
     "q250_ivfpq_nprobe" -> "exact top-k + scored-candidate localCheckpoint",
     "q251_ivfpq_residual" ->
       "raw + residual ladders: exact top-k + scored-candidate localCheckpoints",
     "q256_ivfpq_trained" ->
-      ("q251's checkpoints + the trained branch's Lloyd loops " +
-        "(kmeansCentroids rounds, pqCodebookFit rounds — the rounds ARE " +
-        "the algorithm, models are k×d / m×nCodes×subDim checkpoints)"),
+      ("q251's checkpoints + the trained arm's two Lloyd kernel fits " +
+        "(kmeansCentroids, pqCodebookFit: a seed collect and one job " +
+        "per round each; the models are local relations)"),
     // BPE merge training
     "q158_bpe_merges" -> "BPE merge loop",
     "q163_bpe_vocab" -> "BPE merge loop",
@@ -124,9 +123,10 @@ class PlanBuildJobsSpec extends SparkSpec {
       "corpus postings checkpoint (Dedup crossCorpusDedup)",
   )
 
-  /** Exact plan-build job counts of the graph-loop queries at sf0.001
-    * (an allowlisted query is otherwise only held to "n > 0"): a loop
-    * round that gains a Spark action changes its count and fails here.
+  /** Exact plan-build job counts of the graph-loop and Lloyd queries at
+    * sf0.001 (an allowlisted query is otherwise only held to "n > 0"): a
+    * loop round that gains a Spark action changes its count and fails
+    * here.
     */
   private val exactJobs: Map[String, Int] = Map(
     "q37_connected_components" -> 6,
@@ -141,6 +141,9 @@ class PlanBuildJobsSpec extends SparkSpec {
     "q104_bfs_hops" -> 13,
     "q150_walks" -> 7,
     "q224_partition_quality" -> 10,
+    // the AQE job of the spread embeddings shuffle, the seed collect and
+    // one job per round (iters = 2)
+    "q118_kmeans_fit" -> 4,
   )
 
   test("plan build runs zero jobs outside the documented allowlist") {
@@ -171,7 +174,7 @@ class PlanBuildJobsSpec extends SparkSpec {
           s"$name: $n (expected ${exactJobs(name)})"
       }
       assert(inexact.isEmpty,
-        s"graph-loop plan-build job counts moved: $inexact — a loop round " +
+        s"loop plan-build job counts moved: $inexact — a loop round " +
           "gained or lost a Spark action")
     } finally work.close()
   }

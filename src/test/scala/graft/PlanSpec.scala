@@ -249,11 +249,11 @@ class PlanSpec extends SparkSpec {
     //    q251 (q250's sides for BOTH encodings — the residual ladder
     //    adds only a per-(query, probed-cell) LUT, |queries|×nprobe×
     //    m×nCodes broadcast rows, still bounded),
-    //    q256 (q251's sides for raw+residual, PLUS the trained branch:
-    //    kmeansCentroids' ≤1024-row model per Lloyd round — q118's one
-    //    BNLJ per round — and pqCodebookFit's m×nCodes≤1024·m-row
-    //    codebook per round; every trained-side broadcast is a model
-    //    table, never corpus rows),
+    //    q256 (q251's sides for raw+residual, PLUS the trained arm's
+    //    two fitted models, local relations: kmeansCentroids' ≤1024-row
+    //    centroid table the index assignment BNLJ broadcasts, and
+    //    pqCodebookFit's m×nCodes≤1024·m-row codebook; every
+    //    trained-side broadcast is a model table, never corpus rows),
     //    q252 (batch serving: probeCentroids' shortlist + the batch
     //    LUT — the q250 serving sides without the recall audit),
     //    q218 (the single stream-total row of the stop-word shares),
@@ -266,7 +266,6 @@ class PlanSpec extends SparkSpec {
     //    that neither runs a job at plan-build time),
     //  - the ≤1024-row centroid seed table (assignToCentroids and
     //    kmeansFit require k <= 1024): q34, q53, q75, q94, q107, q110,
-    //    q118 (one BNLJ per Lloyd round, k-row build side each),
     //    q155/q165 (ride blockedKnn's centroid assignment)
     //    q242 (the single-row broadcast of the query blob's byte
     //    histogram — binaryNearDupTopK, the q30 shape on binary),
@@ -289,7 +288,7 @@ class PlanSpec extends SparkSpec {
       "q222_tfidf_tags",
       "q34_centroid_assign", "q53_blocked_allpairs", "q75_kmeans_step",
       "q94_semantic_dedup", "q107_hard_negatives", "q110_blocked_knn",
-      "q118_kmeans_fit", "q155_mutual_knn", "q165_label_consistency")
+      "q155_mutual_knn", "q165_label_consistency")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, _) if parity(name) => None
       case (name, fn) =>

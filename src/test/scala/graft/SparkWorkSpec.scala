@@ -26,6 +26,21 @@ class SparkWorkSpec extends SparkSpec {
     }
   }
 
+  test("peak memory is one task's peak: 8 partitions of the same rows " +
+       "peak as high as 1 partition, not 8 times higher") {
+    withWork { work =>
+      // each task sorts the same number of longs in memory
+      def peak(partitions: Int): Long = work.measure(s"sw-peak-$partitions") {
+        spark.range(0, 20000L * partitions, 1, partitions)
+          .sortWithinPartitions(org.apache.spark.sql.functions.col("id").desc)
+          .write.format("noop").mode("overwrite").save()
+      }._3.peakExecMemBytes
+      val one = peak(1)
+      assert(one > 0)
+      assert(peak(8) == one)
+    }
+  }
+
   test("two threads measuring under different groups do not mix their work") {
     withWork { work =>
       val sc = spark.sparkContext

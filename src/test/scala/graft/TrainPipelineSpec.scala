@@ -1023,6 +1023,80 @@ class TrainPipelineSpec extends SparkSpec {
     assert(one == step)
   }
 
+  test("pqCodebookFit: hand-computed 2-round Lloyd at m = 2, a code " +
+       "moves in round 2, the trailing remainder dim is dropped") {
+    // d = 5, m = 2: subspaces are dims 1-2 and 3-4, dim 5 is dropped
+    val df = Seq(
+      (0L, Array(0f, 0f, 0f, 0f, 99f)), (1L, Array(10f, 10f, 4f, 0f, 99f)),
+      (2L, Array(0f, 1f, 1f, 0f, 99f)), (3L, Array(10f, 9f, 10f, 0f, 99f)),
+      (4L, Array(1f, 0f, 3f, 0f, 99f)))
+      .toDF("vec_id", "embedding")
+    val out = SimilarityOps.pqCodebookFit(df, "vec_id", "embedding", m = 2,
+        nCodes = 2, iters = 2)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
+      .sortBy(t => (t._2, t._1))
+    // sub 0, seeds (0,0) and (10,10): both rounds put {0,2,4} in code 0
+    // and {1,3} in code 1 -> (1/3, 1/3) and (10, 9.5).
+    // sub 1, seeds (0,0) and (4,0): round 1 puts {0,2} in code 0 and
+    // {1,3,4} in code 1 -> (0.5, 0) and (17/3, 0); in round 2 id 4 at
+    // (3,0) moves to code 0 (6.25 < 7.111) -> (4/3, 0) and (7, 0)
+    assert(out.toSeq == Seq(
+      (0L, 0, Seq(0.333333, 0.333333)), (1L, 0, Seq(10.0, 9.5)),
+      (0L, 1, Seq(1.333333, 0.0)), (1L, 1, Seq(7.0, 0.0))))
+  }
+
+  test("Lloyd fits: the model is bit-identical at 1 and 4 input partitions") {
+    val rnd = new scala.util.Random(7)
+    val df = (0L until 200L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    def fits(parts: Int) = {
+      val in = df.repartition(parts)
+      (SimilarityOps.kmeansFit(in, "vec_id", "embedding", k = 4, iters = 3)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
+        .sortBy(t => (t._1, t._2)).toSeq,
+       SimilarityOps.pqCodebookFit(in, "vec_id", "embedding", m = 2,
+           nCodes = 4, iters = 3)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
+        .sortBy(t => (t._2, t._1)).toSeq)
+    }
+    val (km1, pq1) = fits(1)
+    val (km4, pq4) = fits(4)
+    assert(km1.nonEmpty && pq1.nonEmpty)
+    assert(km1 == km4)
+    assert(pq1 == pq4)
+  }
+
+  test("roundHalfUp matches Spark's round at scale 0 and 6") {
+    val xs = Seq(0.5, 1.5, 2.5, -0.5, -2.5, -0.4, 2.675, 0.0000005,
+      0.0000015, -0.0000025, 1.0000005, -7.2500005, 123456.1234565,
+      4503599627370495.5, 1e15 + 0.5, -1e17, 1e20, Double.MaxValue)
+    for (scale <- Seq(0, 6)) {
+      val spark6 = spark.range(1)
+        .select(xs.map(x => round(lit(x), scale)): _*)
+        .head().toSeq.map(_.asInstanceOf[Double])
+      val local = xs.map(SimilarityOps.roundHalfUp(_, scale))
+      assert(local.map(java.lang.Double.doubleToLongBits) ==
+        spark6.map(java.lang.Double.doubleToLongBits),
+        s"scale $scale: $local vs $spark6")
+    }
+  }
+
+  test("Lloyd fits release their persisted points when a round fails") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = spark.range(0, 6, 1, 2).select(col("id").as("vec_id"),
+      when(col("id") === 5, raise_error(lit("lloyd-boom")))
+        .otherwise(array(col("id").cast("float"), lit(0f))).as("embedding"))
+    for (fit <- Seq(
+        () => SimilarityOps.kmeansFit(df, "vec_id", "embedding", k = 2, iters = 2),
+        () => SimilarityOps.pqCodebookFit(df, "vec_id", "embedding", m = 2,
+          nCodes = 2, iters = 2))) {
+      val e = intercept[Exception](fit())
+      assert(e.getMessage.contains("lloyd-boom"), e)
+      assert(sc.getPersistentRDDs.keySet == before)
+    }
+  }
+
   test("rrfHybridTopK: fused ranks and score arithmetic, outer-list nulls") {
     val docs = Seq((0L, "alpha beta"), (1L, "spark"), (2L, "spark pad"),
       (3L, "other words here")).toDF("doc_id", "text")

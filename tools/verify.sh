@@ -1,11 +1,20 @@
 #!/bin/bash
 # Local dev harness: run graft.Verify on compiled classes without sbt startup.
 # Usage: tools/verify.sh [sfDir] [outDir]
-set -e
+# When Verify ends it prints two defect counts taken from its stderr
+# (which still reaches the terminal): `WindowExec: No Partition Defined`
+# warnings (a window over one task) and `Block rdd_… already exists`
+# messages (two tasks computed the same persisted partition).
+set -e -o pipefail
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 . "$(dirname "$0")/jvm.sh"
-java $GRAFT_JVM_OPTS -Xmx8g -cp "$GRAFT_CP" graft.Verify "$SF" "$OUT"
+ERR=$(mktemp)
+trap 'rm -f "$ERR"' EXIT
+{ java $GRAFT_JVM_OPTS -Xmx8g -cp "$GRAFT_CP" graft.Verify "$SF" "$OUT" 2>&1 1>&3 |
+    tee "$ERR" >&2; } 3>&1
+echo "verify defects: window_no_partition=$(grep -c 'WindowExec: No Partition Defined' "$ERR" || true)" \
+  "block_already_exists=$(grep -cE 'Block rdd_[0-9]+_[0-9]+ already exists' "$ERR" || true)"
 # Typecheck THE DUMP JUST PRODUCED (not a default path that may be
 # stale — the r6 judge caught exactly that): every oracle output column
 # must avoid HUGEINT/DECIMAL, the version-fragile hash-compare types.
