@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.{FileStore, WdbIO, WhisperState}
 import graft.model.{Node, NodeCodec}
+import graft.tags.TagOps
 
 /** Conjunctive filter set for Q2/Q3 (reference accepts exactly these
   * five params, src/main.cpp:72-77). Semantics
@@ -257,7 +258,7 @@ object WhisperDB {
         case None => lit(false)
       }),
       f.title.map(v => col("title").contains(v)),
-      f.tag.map(v => array_contains(col("tags"), v))).flatten
+      f.tag.map(TagOps.hasTag)).flatten
     preds.reduceOption(_ && _).getOrElse(lit(true))
   }
 

@@ -38,8 +38,8 @@ import graft.model.{Node, NodeCodec}
   *
   * This class is serving plumbing only — every data path delegates to
   * the facade, which is the Spark-native engine. One server instance
-  * serves one facade; handlers run on a small pool (the driver-side
-  * Spark session is shared, so request parallelism adds no cluster
+  * serves one facade; handlers run on a small pool over the facade's
+  * one interpreted serving session (request parallelism adds no cluster
   * parallelism — queries themselves are distributed).
   */
 class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
@@ -382,8 +382,7 @@ class HttpApiServer(api: WhisperApi, bindPort: Int = 0) {
 
   private def nodesByTag(req: Req): Resp = {
     val tag = req.params("tag")
-    val rows = api.nodesByTag(tag).select(Node.schema.fieldNames.map(
-      org.apache.spark.sql.functions.col): _*).collect()
+    val rows = api.nodesByTag(tag).collect()
     ok(s"""{"status":"success","tag":${Json.str(tag)},"nodes":${
       Json.arr(rows.map(Json.nodeJson))},"count":${rows.length}}""")
   }

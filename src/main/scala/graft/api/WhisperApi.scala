@@ -1,7 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.Sessions
 import graft.{NodeFilters, NodePatch, WhisperDB}
 import graft.enrich.{ClusteringReport, EnrichService, TaggingReport}
 import graft.model.{Node, NodeCodec}
@@ -68,6 +69,14 @@ final case class NodeRead(db: WhisperDB, row: Row) {
   * re-opening the source files. The pin uses `cache()`'s MEMORY_AND_DISK
   * level: an evicted block spills to local disk rather than being
   * recomputed from a source that may have changed or gone since.
+  *
+  * Every served snapshot runs on a session the facade owns: a clone of
+  * the caller's session that compiles no code ([[Sessions.interpreted]]).
+  * A request's plan inlines its own id, filter value or patch, so code
+  * generated for it is compiled once and never reused; interpreted, a
+  * short request skips the compile. The caller's session keeps
+  * whole-stage codegen, and the two all-pairs enrichment writes
+  * (`cluster`, `linkAllByTags`) run on it.
   */
 class WhisperApi(initial: WhisperDB,
                  enrich: EnrichService,
@@ -75,7 +84,16 @@ class WhisperApi(initial: WhisperDB,
 
   Seq(initial.nodes, initial.nodeFiles).foreach(_.cache().count())
 
-  @volatile private var current: WhisperDB = initial
+  private val caller: SparkSession = initial.spark
+  private val serving: SparkSession = Sessions.interpreted(caller)
+
+  /** `db` with its session and both tables bound to `session`. */
+  private def on(session: SparkSession, db: WhisperDB): WhisperDB =
+    new WhisperDB(session, db.state.copy(
+      nodes = Sessions.rebind(db.nodes, session),
+      nodeFiles = Sessions.rebind(db.nodeFiles, session)))
+
+  @volatile private var current: WhisperDB = on(serving, initial)
   def db: WhisperDB = current
 
   /** Serializes read-modify-write transitions of `current`. The
@@ -92,7 +110,7 @@ class WhisperApi(initial: WhisperDB,
     transition.synchronized {
       f(current) match {
         case Left(err) => err
-        case Right((db2, a)) => current = db2; ApiOk(a)
+        case Right((db2, a)) => current = on(serving, db2); ApiOk(a)
       }
     }
 
@@ -253,27 +271,28 @@ class WhisperApi(initial: WhisperDB,
     }
 
   /** POST /api/cluster?threshold (V7, default 0.75; threshold must be
-    * in [0,1] like POST /api/tags/link-all, main.cpp:675-677).
+    * in [0,1] like POST /api/tags/link-all, main.cpp:675-677). All-pairs
+    * work, so it runs on the caller's session, where it is compiled.
     */
   def cluster(threshold: Double = 0.75): ApiResult[ClusteringReport] =
     if (threshold < 0 || threshold > 1) ApiError(400, "threshold must be in [0,1]")
-    else mutate(db => Right(enrich.runClustering(db, threshold)))
+    else mutate(db => Right(enrich.runClustering(on(caller, db), threshold)))
 
   /** GET /api/tags (T1). */
   def getTags: Seq[String] = current.tagBank
 
-  /** GET /api/tags/:tag/nodes (T3 + payload join). Snapshot captured
-    * once — see getNode.
+  /** GET /api/tags/:tag/nodes (T3 with the node payload): one filtered
+    * scan, in Node.schema column order.
     */
-  def nodesByTag(tag: String): DataFrame = {
-    val nodes = current.nodes
-    TagOps.findNodesByTag(nodes, tag).join(nodes, "id")
-  }
+  def nodesByTag(tag: String): DataFrame =
+    current.nodes.filter(TagOps.hasTag(tag)).select(Node.schema.fieldNames.map(col): _*)
 
-  /** POST /api/tags/link-all?threshold (E9 batch). */
+  /** POST /api/tags/link-all?threshold (E9 batch); all-pairs, so on the
+    * caller's session like `cluster`.
+    */
   def linkAllByTags(threshold: Double = 0.3): ApiResult[Long] =
     if (threshold < 0 || threshold > 1) ApiError(400, "threshold must be in [0,1]")
-    else mutate(db => Right(enrich.updateAllTagBasedLinks(db, threshold)))
+    else mutate(db => Right(enrich.updateAllTagBasedLinks(on(caller, db), threshold)))
 
   /** GET /api/clusters (V8). */
   def clusters(): DataFrame = enrich.getClusters(current)

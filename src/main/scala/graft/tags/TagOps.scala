@@ -15,11 +15,14 @@ import graft.functions.TextFunctions
   */
 object TagOps {
 
-  /** T3: ids of nodes whose tags contain the exact tag
+  /** T3 membership: the row's tags contain the exact tag
     * (reference: GraphDB.cpp:508-517).
     */
+  def hasTag(tag: String): Column = array_contains(col("tags"), tag)
+
+  /** T3: ids of nodes whose tags contain the exact tag. */
   def findNodesByTag(nodes: DataFrame, tag: String): DataFrame =
-    nodes.filter(array_contains(col("tags"), tag)).select("id")
+    nodes.filter(hasTag(tag)).select("id")
 
   /** T4: ids of *other* nodes sharing >= 1 tag with `nodeId`
     * (reference: GraphDB.cpp:519-546). The target's tag list is a

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.{Graft, SparkEntry, SparkWork}
 
 /** Dev tool: run one named query and print, per run, where its time
@@ -7,7 +9,9 @@ import graft.{Graft, SparkEntry, SparkWork}
   * stages, tasks, shuffle write and read bytes, spill bytes, peak
   * execution memory, and the wall time of stages that ran a single task
   * — serial work such as a collect or a broadcast build), each phase
-  * counted in its own job group by [[SparkWork]].
+  * counted in its own job group by [[SparkWork]], and the classes
+  * Janino compiled over the run (`codegen_compiles`: code generated
+  * afresh, not taken from the code cache).
   * `--runs N` repeats the timed run N times after the warm-up and
   * prints the warm MEDIAN of build + exec: a bench delta is shown to be
   * noise with warm medians, not eyeballed single runs. `--explain`
@@ -38,16 +42,19 @@ object QueryProbe {
     // with the previous run's checkpoint blocks still resident
     val times = (1 to 1 + runs).map { i =>
       Graft.evictAll(spark)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (df, buildS, build) = work.measure(s"probe-run$i-build")(fn(spark, sfDir))
       // full-materialization forcing, matching Bench's r8 protocol
       // (df.count() lets Catalyst eliminate cardinality-preserving
       // outer joins and times a pruned plan on report-shaped queries)
       val (n, execS, exec) = work.measure(s"probe-run$i-exec")(df.queryExecution.toRdd.count())
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       println(f"[probe] $name run$i: ${buildS + execS}%.2fs rows=$n " +
         f"build=$buildS%.2fs/${build.jobs}j exec=$execS%.2fs/${exec.jobs}j/" +
         f"${exec.stages}st/${exec.tasks}t single_task_stage_ms=${exec.singleTaskStageMs} " +
         s"shuffle_write_bytes=${exec.shuffleWriteBytes} shuffle_read_bytes=${exec.shuffleReadBytes} " +
-        s"spill_bytes=${exec.spillBytes} peak_exec_mem_bytes=${exec.peakExecMemBytes}")
+        s"spill_bytes=${exec.spillBytes} peak_exec_mem_bytes=${exec.peakExecMemBytes} " +
+        s"codegen_compiles=$compiles")
       buildS + execS
     }
     if (runs > 1) {

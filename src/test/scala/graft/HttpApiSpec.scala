@@ -6,6 +6,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions.col
 
 import graft.api.{HttpApiServer, Multipart, WhisperApi}
@@ -502,7 +504,8 @@ class HttpApiSpec extends SparkSpec {
 
   test("Spark jobs per request on a loaded snapshot: GET 2, similar 2, " +
        "PUT 2, DELETE 1") {
-    // one client, so every job between two sentinels is that request's
+    // (and tag 1: GET /api/tags/:tag/nodes is one filtered scan).
+    // One client, so every job between two sentinels is that request's
     // (handler threads carry no job group); a re-added existence probe
     // or a second read of the node changes a count here
     val api = nativeApi(nativeSnapshot())
@@ -521,13 +524,59 @@ class HttpApiSpec extends SparkSpec {
       val counts = Seq(
         "GET" -> jobs("GET", "/api/nodes/1"),
         "similar" -> jobs("GET", "/api/nodes/1/similar?limit=5"),
+        "tag" -> jobs("GET", "/api/tags/t1/nodes"),
         "PUT" -> jobs("PUT", "/api/nodes/2", """{"title":"Patched"}"""),
         "DELETE" -> jobs("DELETE", "/api/nodes/4"),
         "GET after writes" -> jobs("GET", "/api/nodes/2"),
         "similar after writes" -> jobs("GET", "/api/nodes/2/similar?limit=5"))
-      assert(counts == Seq("GET" -> 2, "similar" -> 2, "PUT" -> 2, "DELETE" -> 1,
+      assert(counts == Seq("GET" -> 2, "similar" -> 2, "tag" -> 1, "PUT" -> 2, "DELETE" -> 1,
         "GET after writes" -> 2, "similar after writes" -> 2))
     } finally work.close()
+  }
+
+  test("no code is generated per request") {
+    // a request's plan inlines its own id, filter value or patch, so
+    // generated code would be new for every request: the facade's
+    // session interprets instead. Round one, every write kind and then
+    // every read kind, warms what is compiled once per column-type list
+    // (the in-memory scan's column accessors, which have no interpreted
+    // form); round two, on fresh ids, filters, courses and writes, must
+    // compile nothing.
+    val api = nativeApi(nativeSnapshot())
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    serve(api) { base =>
+      def ok(method: String, path: String, body: String = ""): String = {
+        val (st, b) = send(method, base + path, body.getBytes)
+        assert(st == 200 || st == 201, s"$method $path: $st $b")
+        b
+      }
+      def round(id: Int, author: String, course: Int, title: String, tag: String): Unit = {
+        val created = jsonField(ok("POST", "/api/nodes",
+          s"""{"title":"New $id","author":"$author","subject":"S","course":$course,"tags":["$tag"]}"""), "nodeId")
+        ok("PUT", s"/api/nodes/$created", s"""{"title":"Patched $id","course":"${course + 1}"}""")
+        ok("PUT", s"/api/nodes/$id", s"""{"description":"patched by round $id"}""")
+        ok("GET", s"/api/nodes/$created")
+        ok("DELETE", s"/api/nodes/$created")
+        ok("DELETE", s"/api/nodes/${id + 1}")
+        ok("GET", s"/api/nodes/$id")
+        ok("GET", s"/api/nodes/$id/files")
+        ok("GET", s"/api/nodes/$id/similar?limit=3")
+        ok("GET", s"/api/nodes?author=$author&sort=title&order=desc&limit=5")
+        ok("GET", s"/api/nodes?course=$course&title=$title&sort=date&limit=3&offset=1")
+        ok("GET", s"/api/nodes/count?author=$author&course=$course")
+        ok("GET", s"/api/tags/$tag/nodes")
+        ok("GET", "/api/tags")
+        ok("GET", "/health")
+      }
+      round(1, "A1", 101, "Doc", "t0")
+      val before = compiles()
+      round(7, "A3", 103, "Doc+1", "t2")
+      assert(compiles() == before, s"${compiles() - before} classes compiled in round two")
+    }
+    // the caller's session keeps whole-stage codegen
+    assert(spark.conf.get("spark.sql.codegen.wholeStage") == "true")
+    val plan = spark.range(10).selectExpr("id * 2 AS x").filter("x > 3").queryExecution.executedPlan
+    assert(plan.collectFirst { case w: WholeStageCodegenExec => w }.isDefined, plan.treeString)
   }
 
   test("stop() ends every handler thread of the server") {

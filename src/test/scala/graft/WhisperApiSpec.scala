@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
-import graft.api.{ApiError, ApiOk, Validation, WhisperApi}
+import org.apache.spark.sql.graft.Sessions
+import graft.api.{ApiError, ApiOk, NodeRead, Validation, WhisperApi}
 import graft.enrich.{EnrichService, MockEmbedder, MockTagger}
 import graft.io.WhisperState
 import graft.model.Node
 import graft.similarity.SimilarityOps
+import graft.tags.TagOps
 
 /** End-to-end facade test replaying the reference's CRUD e2e script
   * (CURL_TESTS.md:390-445): create → get → update → verify → count →
@@ -194,5 +197,89 @@ class WhisperApiSpec extends SparkSpec {
       case e => fail(s"similarNodes($id): $e")
     }
     assert(api.similarNodes(99L) == ApiError(404, "Node 99 not found"))
+  }
+
+  test("the served snapshot answers every read as the caller's session " +
+       "does, before and after writes") {
+    import spark.implicits._
+    // ties on every sortable field but id, duplicate tags, a zero vector, a
+    // vector tied with another, and nodes without one
+    val vecs: Seq[Option[Seq[Float]]] = Seq(Some(Seq(1f, 0f, 0f)), Some(Seq(1f, 0f, 0f)),
+      Some(Seq(0f, 0f, 0f)), None, Some(Seq(0.3f, 0.5f, 0.1f)), Some(Seq(-1f, 2f, 0f)),
+      Some(Seq(2f, 0f, 0f)), None, Some(Seq(0f, 1f, 0f)), Some(Seq(0.5f, 0.5f, 0.5f)))
+    val nodes = vecs.zipWithIndex.map { case (v, i) =>
+      Node(id = i + 1L, title = s"T${i % 3}", course = 100 + i % 2, subject = s"S${i % 4}",
+        description = s"d$i", author = s"A${i % 3}", date = f"2024-01-0${1 + i % 4} 00:00:00",
+        tags = if (i % 5 == 0) Seq("x", "x") else Seq(s"t${i % 3}", "x"), embedding = v)
+    }.toDS().toDF()
+    val files = Seq((1L, "a.txt"), (1L, "b.txt"), (3L, "c.txt")).toDF("node_id", "path")
+    val api = new WhisperApi(
+      new WhisperDB(spark, WhisperState(nodes, files, Seq("x"), vecs.size.toLong, vecs.size + 1L)),
+      new EnrichService(new MockEmbedder(8), new MockTagger))
+
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+    def sameReads(when: String): Unit = {
+      val served = api.db
+      val ref = new WhisperDB(spark, served.state.copy(
+        nodes = Sessions.rebind(served.nodes, spark),
+        nodeFiles = Sessions.rebind(served.nodeFiles, spark)))
+      // the two sides really plan differently
+      def codegen(db: WhisperDB): Boolean = db.nodes.filter(col("author") === "A1")
+        .queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+      assert(served.nodes.sparkSession ne spark)
+      assert(!codegen(served) && codegen(ref))
+
+      val filters = Seq(NodeFilters(), NodeFilters(author = Some("A1")),
+        NodeFilters(course = Some("101"), tag = Some("x")), NodeFilters(title = Some("T2")))
+      for (f <- filters) {
+        assert(api.countNodes(f) == ref.countNodes(f), s"$when: count $f")
+        for (field <- Node.sortableFields.toSeq :+ "unknown"; order <- Seq("asc", "desc");
+             (limit, offset) <- Seq((0, 0), (3, 0), (4, 2), (0, 5)))
+          assert(rows(api.listNodes(f, field, order, limit, offset)) ==
+            rows(ref.findNodes(f, field, order, limit, offset)),
+            s"$when: list $f by $field $order limit $limit offset $offset")
+      }
+      for (id <- 1L to vecs.size + 2) {
+        val read = api.readNode(id)
+        assert(read.map(_.row) == ref.row(id), s"$when: get $id")
+        api.getNode(id) match {
+          case ApiOk((n, fs)) =>
+            assert(rows(n) == ref.row(id).toSeq && rows(fs) == rows(ref.getNodeFiles(id)),
+              s"$when: get $id")
+          case e => assert(ref.row(id).isEmpty, s"$when: get $id: $e")
+        }
+        for (n <- read; k <- Seq(1, 4, 20))
+          assert(rows(api.similarTo(n, k)) == rows(api.similarTo(NodeRead(ref, n.row), k)),
+            s"$when: similar $id k $k")
+      }
+      for (tag <- Seq("x", "t1", "t2", "nope"))
+        assert(rows(api.nodesByTag(tag)) ==
+          rows(ref.nodes.filter(TagOps.hasTag(tag)).select(Node.schema.fieldNames.map(col): _*)),
+          s"$when: tag $tag")
+    }
+
+    sameReads("as loaded")
+    val ApiOk(created) = api.createNode(Node(id = Int.MaxValue, title = "T1", course = 101,
+      subject = "S1", author = "A1", tags = Seq("t1"), embedding = Some(Seq(1f, 0f, 0f))),
+      now = () => "2024-01-02 00:00:00"): @unchecked
+    assert(api.updateNode(2L, NodePatch(title = Some("T0"), course = Some("100"),
+      tags = Some(Seq("t2")), embedding = Some(Seq(0f, 0f, 1f)))) == ApiOk(2L))
+    assert(api.deleteNode(5L) == ApiOk(5L))
+    assert(api.db.row(created).isDefined && api.db.row(5L).isEmpty)
+    sameReads("after a create, a PUT and a DELETE")
+  }
+
+  test("nodesByTag is one filtered scan: a duplicated id comes back once per row") {
+    import spark.implicits._
+    val nodes = Seq(
+      Node(id = 1L, title = "a", subject = "s", author = "x", tags = Seq("k")),
+      Node(id = 1L, title = "b", subject = "s", author = "x", tags = Seq("k")),
+      Node(id = 2L, title = "c", subject = "s", author = "x", tags = Seq("j"))).toDS().toDF()
+    val api = new WhisperApi(WhisperDB.empty(spark).withState(
+      WhisperDB.empty(spark).state.copy(nodes = nodes, declaredSize = 3)),
+      new EnrichService(new MockEmbedder(8), new MockTagger))
+    val byTag = api.nodesByTag("k")
+    assert(byTag.columns.toSeq == Node.schema.fieldNames.toSeq)
+    assert(byTag.collect().map(_.getString(1)).sorted.toSeq == Seq("a", "b"))
   }
 }
