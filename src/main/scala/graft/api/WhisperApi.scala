@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.Sessions
 import graft.{NodeFilters, NodePatch, WhisperDB}
@@ -74,9 +74,10 @@ final case class NodeRead(db: WhisperDB, row: Row) {
   * the caller's session that compiles no code ([[Sessions.interpreted]]).
   * A request's plan inlines its own id, filter value or patch, so code
   * generated for it is compiled once and never reused; interpreted, a
-  * short request skips the compile. The caller's session keeps
-  * whole-stage codegen, and the two all-pairs enrichment writes
-  * (`cluster`, `linkAllByTags`) run on it.
+  * short request skips the compile. The snapshot is bound to that
+  * session once, here; every write builds its snapshot from the one it
+  * replaces, so it stays there. The caller's session keeps whole-stage
+  * codegen.
   */
 class WhisperApi(initial: WhisperDB,
                  enrich: EnrichService,
@@ -84,16 +85,12 @@ class WhisperApi(initial: WhisperDB,
 
   Seq(initial.nodes, initial.nodeFiles).foreach(_.cache().count())
 
-  private val caller: SparkSession = initial.spark
-  private val serving: SparkSession = Sessions.interpreted(caller)
-
-  /** `db` with its session and both tables bound to `session`. */
-  private def on(session: SparkSession, db: WhisperDB): WhisperDB =
-    new WhisperDB(session, db.state.copy(
-      nodes = Sessions.rebind(db.nodes, session),
-      nodeFiles = Sessions.rebind(db.nodeFiles, session)))
-
-  @volatile private var current: WhisperDB = on(serving, initial)
+  @volatile private var current: WhisperDB = {
+    val serving = Sessions.interpreted(initial.spark)
+    new WhisperDB(serving, initial.state.copy(
+      nodes = Sessions.rebind(initial.nodes, serving),
+      nodeFiles = Sessions.rebind(initial.nodeFiles, serving)))
+  }
   def db: WhisperDB = current
 
   /** Serializes read-modify-write transitions of `current`. The
@@ -110,7 +107,7 @@ class WhisperApi(initial: WhisperDB,
     transition.synchronized {
       f(current) match {
         case Left(err) => err
-        case Right((db2, a)) => current = on(serving, db2); ApiOk(a)
+        case Right((db2, a)) => current = db2; ApiOk(a)
       }
     }
 
@@ -271,12 +268,11 @@ class WhisperApi(initial: WhisperDB,
     }
 
   /** POST /api/cluster?threshold (V7, default 0.75; threshold must be
-    * in [0,1] like POST /api/tags/link-all, main.cpp:675-677). All-pairs
-    * work, so it runs on the caller's session, where it is compiled.
+    * in [0,1] like POST /api/tags/link-all, main.cpp:675-677).
     */
   def cluster(threshold: Double = 0.75): ApiResult[ClusteringReport] =
     if (threshold < 0 || threshold > 1) ApiError(400, "threshold must be in [0,1]")
-    else mutate(db => Right(enrich.runClustering(on(caller, db), threshold)))
+    else mutate(db => Right(enrich.runClustering(db, threshold)))
 
   /** GET /api/tags (T1). */
   def getTags: Seq[String] = current.tagBank
@@ -287,12 +283,10 @@ class WhisperApi(initial: WhisperDB,
   def nodesByTag(tag: String): DataFrame =
     current.nodes.filter(TagOps.hasTag(tag)).select(Node.schema.fieldNames.map(col): _*)
 
-  /** POST /api/tags/link-all?threshold (E9 batch); all-pairs, so on the
-    * caller's session like `cluster`.
-    */
+  /** POST /api/tags/link-all?threshold (E9 batch). */
   def linkAllByTags(threshold: Double = 0.3): ApiResult[Long] =
     if (threshold < 0 || threshold > 1) ApiError(400, "threshold must be in [0,1]")
-    else mutate(db => Right(enrich.updateAllTagBasedLinks(on(caller, db), threshold)))
+    else mutate(db => Right(enrich.updateAllTagBasedLinks(db, threshold)))
 
   /** GET /api/clusters (V8). */
   def clusters(): DataFrame = enrich.getClusters(current)

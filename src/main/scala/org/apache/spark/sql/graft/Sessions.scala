@@ -29,7 +29,6 @@ object Sessions {
     * shared by every session of one context.
     */
   def rebind(df: DataFrame, spark: SparkSession): DataFrame =
-    if (df.sparkSession eq spark) df
-    else classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 }

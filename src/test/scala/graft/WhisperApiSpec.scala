@@ -282,4 +282,37 @@ class WhisperApiSpec extends SparkSpec {
     assert(byTag.columns.toSeq == Node.schema.fieldNames.toSeq)
     assert(byTag.collect().map(_.getString(1)).sorted.toSeq == Seq("a", "b"))
   }
+
+  test("every write keeps the snapshot on the facade's own session") {
+    // the snapshot is bound to the serving session once, at construction:
+    // a write that built on another session would leave the serving path
+    val api = freshApi
+    val serving = api.db.spark
+    def onServing(after: String): Unit = {
+      val db = api.db
+      assert((db.spark eq serving) && (db.nodes.sparkSession eq serving) &&
+        (db.nodeFiles.sparkSession eq serving), s"after $after")
+    }
+    assert(serving ne spark)
+    val ids = (1 to 3).map { i =>
+      val ApiOk(id) = api.createNode(Node(id = Int.MaxValue, title = s"T$i",
+        subject = "S", author = "A", tags = Seq("t", s"u$i")), now = () => "2024-01-01 00:00:00"): @unchecked
+      id
+    }
+    onServing("create")
+    val id = ids.head
+    val writes: Seq[(String, () => Any)] = Seq(
+      "PUT" -> (() => api.updateNode(id, NodePatch(title = Some("P")))),
+      "attach" -> (() => api.attachFile(id, "a.txt")),
+      "detach" -> (() => api.detachFile(id, "a.txt")),
+      "embedding" -> (() => api.generateEmbedding(id)),
+      "tags" -> (() => api.generateTags(id)),
+      "cluster" -> (() => api.cluster(0.1)),
+      "link-all" -> (() => api.linkAllByTags(0.1)),
+      "DELETE" -> (() => api.deleteNode(ids.last)))
+    for ((name, write) <- writes) {
+      assert(write().isInstanceOf[ApiOk[_]], name)
+      onServing(name)
+    }
+  }
 }
