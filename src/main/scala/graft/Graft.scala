@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.graft.ExpressionColumns
-import graft.functions.{BloomSketch, ByteHistogram, CmsSketch, CosineSimilarity, ExifOrientationExpr, FlacStreaminfo, HyperplaneSignatureExpr, HyperplaneSignatureWideExpr, JaroWinklerSim, JpegDimsExpr, KmvSketch, Mp3Header, Mp4Meta, PngDimsExpr, WebpDimsExpr}
+import graft.functions.{BloomSketch, ByteHistogram, CmsSketch, CosineSimilarity, ExifOrientationExpr, FlacStreaminfo, HyperplaneSignatureWideExpr, JaroWinklerSim, JpegDimsExpr, KmvSketch, Mp3Header, Mp4Meta, PngDimsExpr, WebpDimsExpr}
 
 /** graft's native Catalyst expressions as Columns, the engine's session
   * settings, and storage eviction.
@@ -74,20 +74,14 @@ object Graft {
     * storage: plan-keyed DataFrame caches AND raw RDD persists. Harness
     * mains (Bench/Verify/QueryProbe) call this between queries so
     * storage stays flat across a 100+ query session — safe THERE
-    * because every plan is rebuilt from scratch after the call.
-    *
-    * A caller that still HOLDS DataFrames built before the call must
-    * pass `includeCheckpointed = false`: a `localCheckpoint`ed RDD
-    * (PageRank's edge cache, BFS frontiers, …) has its lineage
-    * truncated, so unpersisting it makes any live plan that references
-    * it permanently unrecoverable ("Checkpoint block not found"), where
-    * plain cached data would just recompute. Long-lived API servers
-    * evicting on a cadence are exactly this case.
+    * because every plan is rebuilt from scratch after the call. A
+    * `localCheckpoint`ed RDD is evicted too, so a caller must not hold
+    * a DataFrame built before the call: its truncated lineage cannot
+    * recompute the blocks ("Checkpoint block not found").
     */
-  def evictAll(spark: SparkSession, includeCheckpointed: Boolean = true): Unit = {
+  def evictAll(spark: SparkSession): Unit = {
     try spark.catalog.clearCache() catch { case _: Throwable => () }
     try spark.sparkContext.getPersistentRDDs.values
-      .filter(includeCheckpointed || !_.isCheckpointed)
       .foreach(_.unpersist(blocking = false))
     catch { case _: Throwable => () }
   }
@@ -165,18 +159,11 @@ object Graft {
   def byteHistogram(bin: Column, bins: Int): Column =
     native(ByteHistogram(expr(bin), bins))
 
-  /** Sign-LSH hyperplane signature of a numeric-array column (native
-    * codegen, one fused loop for all bits; optional mean-centering for
-    * all-nonnegative populations). Bit-identical to
-    * `VectorFunctions.hyperplaneSignatureHof`.
-    */
-  def hyperplaneSig(v: Column, bits: Int, center: Boolean = false): Column =
-    native(HyperplaneSignatureExpr(expr(v), bits, center))
-
-  /** Multi-word sign-LSH signature (`array<long>`, native codegen, one
-    * fused loop for all words×bitsPerWord bits). Bit-identical to
-    * `VectorFunctions.hyperplaneSignatureWideHof` and to word-boundary
-    * slices of the single-long form.
+  /** Sign-LSH signature of a numeric-array column (`array<long>`,
+    * native codegen, one fused loop for all words×bitsPerWord bits;
+    * optional mean-centering for all-nonnegative populations).
+    * Bit-identical to `VectorFunctions.hyperplaneSignatureWideHof`; its
+    * one-word form is `VectorFunctions.hyperplaneSignature`.
     */
   def hyperplaneSigWide(v: Column, words: Int, bitsPerWord: Int,
                         center: Boolean = false): Column =

@@ -217,9 +217,6 @@ class WhisperDB(val spark: SparkSession, val state: WhisperState) {
 
   // ============================ T1/T2: tag bank =========================
 
-  def setTagBank(bank: Seq[String]): WhisperDB =
-    withState(state.copy(tagBank = bank))
-
   /** T2: order-preserving dedup append (GraphDB.cpp:499-506). */
   def addToTagBank(newTags: Seq[String]): WhisperDB = {
     val seen = state.tagBank.toSet

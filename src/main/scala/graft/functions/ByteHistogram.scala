@@ -3,16 +3,16 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType}
 
 /** Native Catalyst expression: normalized `bins`-bin byte histogram of a
   * binary column — the columnar form of `Multimodal.featureStub`. The
-  * histogram stays inside whole-stage codegen (one fused loop over the
-  * payload bytes, no Row round-trip), where the `rdd.mapPartitions`
-  * formulation broke columnar execution and codegen for every operator
-  * downstream of it. Empty/missing payloads give the all-zero vector,
-  * matching the stub.
+  * histogram stays inside whole-stage codegen (the generated code calls
+  * the one loop over the payload bytes, [[Histogram.bytes]]; no Row
+  * round-trip), where the `rdd.mapPartitions` formulation broke
+  * columnar execution and codegen for every operator downstream of it.
+  * Empty/missing payloads give the all-zero vector, matching the stub.
   */
 case class ByteHistogram(child: Expression, bins: Int)
     extends UnaryExpression {
@@ -28,41 +28,33 @@ case class ByteHistogram(child: Expression, bins: Int)
 
   override def prettyName: String = "byte_histogram"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val h = new Array[Float](bins)
-    if (bytes.nonEmpty) {
-      var i = 0
-      while (i < bytes.length) { h((bytes(i) & 0xff) * bins / 256) += 1f; i += 1 }
-      val n = bytes.length.toFloat
-      var j = 0
-      while (j < bins) { h(j) /= n; j += 1 }
-    }
-    new GenericArrayData(h.map(f => f: Any))
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Histogram.bytes(input.asInstanceOf[Array[Byte]], bins)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => {
-      val h = ctx.freshName("hist")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |final float[] $h = new float[$bins];
-         |final int $n = $bytes.length;
-         |if ($n > 0) {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $h[(($bytes[$i] & 0xff) * $bins) / 256] += 1f;
-         |  }
-         |  for (int $j = 0; $j < $bins; $j++) { $h[$j] /= (float) $n; }
-         |}
-         |final Object[] $boxed = new Object[$bins];
-         |for (int $j = 0; $j < $bins; $j++) { $boxed[$j] = $h[$j]; }
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($boxed);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, b => s"graft.functions.Histogram.bytes($b, $bins)")
 
   override protected def withNewChildInternal(newChild: Expression): ByteHistogram =
     copy(child = newChild)
+}
+
+/** Static implementation (top-level object ⇒ static forwarder class,
+  * callable from generated Java).
+  */
+object Histogram {
+
+  def bytes(payload: Array[Byte], bins: Int): ArrayData = {
+    val h = new Array[Float](bins)
+    if (payload.nonEmpty) {
+      var i = 0
+      while (i < payload.length) {
+        h((payload(i) & 0xff) * bins / 256) += 1f
+        i += 1
+      }
+      val n = payload.length.toFloat
+      var j = 0
+      while (j < bins) { h(j) /= n; j += 1 }
+    }
+    new GenericArrayData(h)
+  }
 }

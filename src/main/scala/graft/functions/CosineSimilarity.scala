@@ -17,7 +17,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * guards, src/embedding/Clustering.cpp:7-27: dimension mismatch or
   * zero norm → 0.0) AND bit-identical: the loop accumulates in the same
   * left-fold order, so oracle-validated results are unchanged when this
-  * expression replaces the HOF version.
+  * expression replaces the HOF version. The loop is written once, in
+  * [[Cosine.sim]], which both the interpreted path and the generated
+  * code call.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -37,9 +39,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "cosine_sim"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Cosine.sim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Cosine.sim($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Static implementation (top-level object ⇒ static forwarder class,
+  * callable from generated Java).
+  */
+object Cosine {
+
+  def sim(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (n != y.numElements()) return 0.0
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -53,34 +69,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (na == 0.0 || nb == 0.0) 0.0
     else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.value} = 0.0;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $xi = (double) $a.getFloat($i);
-         |    final double $yi = (double) $b.getFloat($i);
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |  ${ev.value} = ($na == 0.0 || $nb == 0.0)
-         |    ? 0.0 : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
 }

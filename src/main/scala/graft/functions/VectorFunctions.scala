@@ -78,35 +78,20 @@ object VectorFunctions {
     * elements instead (the all-nonnegative-population fix — see
     * `SimilarityOps.lshCandidatePairs`); the mean is the left-fold
     * double sum / size, and identical vectors still share every band.
-    * Built as the native codegen expression `Graft.hyperplaneSig`.
+    * It is word 0 of the one-word [[hyperplaneSignatureWide]], so
+    * `bits` is in [1, 63].
     */
   def hyperplaneSignature(v: Column, bits: Int,
                           center: Boolean = false): Column =
-    graft.Graft.hyperplaneSig(v, bits, center)
+    hyperplaneSignatureWide(v, 1, bits, center).getItem(0)
 
-  /** The higher-order-function spelling of [[hyperplaneSignature]]
-    * (same sign mix, same strict left-fold order), kept as the test
-    * reference the native expression must match bit for bit. It is
-    * CodegenFallback and re-walks the vector once per bit, so
-    * production code does not call it.
+  /** The higher-order-function spelling of [[hyperplaneSignature]]:
+    * word 0 of [[hyperplaneSignatureWideHof]], kept as the test
+    * reference the native expression must match bit for bit.
     */
   def hyperplaneSignatureHof(v: Column, bits: Int,
-                             center: Boolean = false): Column = {
-    val input =
-      if (!center) v
-      else {
-        val mean = aggregate(v, lit(0.0d),
-          (a, x) => a + x.cast("double")) / size(v)
-        transform(v, x => x.cast("double") - mean)
-      }
-    val d = toDouble(input)
-    (0 until bits).map { j =>
-      val proj = aggregate(
-        zip_with(d, transform(d, (_, i) => hpSign(i, j)), (x, s) => x * s),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0.0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
+                             center: Boolean = false): Column =
+    hyperplaneSignatureWideHof(v, 1, bits, center).getItem(0)
 
   /** MULTI-WORD hyperplane signature: `words` longs of `bitsPerWord`
     * sign bits each (`array<long>`, word 0 first) — the vector-side
@@ -121,15 +106,16 @@ object VectorFunctions {
     * byte-identical to the old shift-and-mask slices (spec-pinned).
     * Identical vectors share every word; `center` behaves exactly as in
     * the single-long form. Built as the native codegen expression
-    * `Graft.hyperplaneSigWide`.
+    * `Graft.hyperplaneSigWide`, the one kernel behind both forms.
     */
   def hyperplaneSignatureWide(v: Column, words: Int, bitsPerWord: Int,
                               center: Boolean = false): Column =
     graft.Graft.hyperplaneSigWide(v, words, bitsPerWord, center)
 
-  /** The higher-order-function spelling of [[hyperplaneSignatureWide]],
-    * kept as its bit-for-bit test reference; production code does not
-    * call it.
+  /** The higher-order-function spelling of [[hyperplaneSignatureWide]]
+    * (same sign mix, same strict left-fold order), kept as its
+    * bit-for-bit test reference. It is CodegenFallback and re-walks the
+    * vector once per bit, so production code does not call it.
     */
   def hyperplaneSignatureWideHof(v: Column, words: Int, bitsPerWord: Int,
                                  center: Boolean = false): Column = {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Sessions
+import org.apache.spark.sql.types._
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.similarity.SimilarityOps
 
@@ -118,5 +120,77 @@ class CosineExpressionSpec extends SparkSpec {
           s"native signature equals its HOF reference (center=$center)")
       }
     } finally prior.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+  }
+
+  test("every native scalar expression returns the same rows interpreted " +
+       "as compiled") {
+    Graft.install(spark)
+    def image(fmt: String): Array[Byte] = {
+      val img = new java.awt.image.BufferedImage(19, 7,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      img.setRGB(3, 2, 0x336699)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, fmt, bos)
+      bos.toByteArray
+    }
+    // SOI, APP1 "Exif\0\0", little-endian TIFF whose IFD0 holds one
+    // entry: orientation (0x0112) SHORT = 6
+    val exif = Array(0xff, 0xd8, 0xff, 0xe1, 0x00, 0x22,
+      'E', 'x', 'i', 'f', 0, 0, 'I', 'I', 42, 0, 8, 0, 0, 0,
+      1, 0, 0x12, 0x01, 3, 0, 1, 0, 0, 0, 6, 0, 0, 0, 0, 0, 0, 0,
+      0xff, 0xd9).map(_.toByte)
+    val rnd = new scala.util.Random(0x5EED)
+    def floats(d: Int): Seq[Any] = Seq.fill(d)(rnd.nextFloat() - 0.3f)
+    val payloads = Seq(image("png"), image("jpg"), exif,
+      "not an image".getBytes("UTF-8"), Array.emptyByteArray, null)
+    val names = Seq(("martha", "marhta"), ("café", "cafe"), ("", "abc"),
+      ("dixon", "dicksonx"), (null, "x"), ("same", "same"))
+    val rows = (0 until 24).map { id =>
+      val d = if (id % 6 == 5) 0 else 8 + id % 3
+      val a = if (id == 23) null else floats(d)
+      val b = if (id % 4 == 3) floats(d + 1) else floats(d)
+      // every third vector carries a null element
+      val withNull = floats(d).zipWithIndex.map { case (x, i) =>
+        if (id % 3 == 0 && i == 1) null else x }
+      val dbl = floats(d).map(_.asInstanceOf[Float].toDouble * 1e3)
+      Row(id.toLong, a, b, withNull, dbl, names(id % 6)._1,
+        names(id % 6)._2, payloads(id % 6))
+    }
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("a", ArrayType(FloatType)),
+      StructField("b", ArrayType(FloatType)),
+      StructField("n", ArrayType(FloatType)),
+      StructField("dv", ArrayType(DoubleType)),
+      StructField("s", StringType), StructField("t", StringType),
+      StructField("bin", BinaryType)))
+    def run(s: SparkSession): (Seq[Row], String) = {
+      // the shuffle keeps the projection out of the local relation, so
+      // it runs in the session's own execution mode
+      val df = s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .repartition(3)
+        .select(col("id"),
+          Graft.cosineSim(col("a"), col("b")).as("cos"),
+          Graft.jaroWinkler(col("s"), col("t")).as("jw"),
+          Graft.hyperplaneSigWide(col("a"), 3, 20).as("hp"),
+          Graft.hyperplaneSigWide(col("n"), 2, 31, center = true).as("hpn"),
+          VectorFunctions.hyperplaneSignature(col("dv"), 63, center = true)
+            .as("hpd"),
+          Graft.byteHistogram(col("bin"), 16).as("hist"),
+          Graft.pngDims(col("bin")).as("png"),
+          Graft.jpegDims(col("bin")).as("jpeg"),
+          Graft.exifOrientation(col("bin")).as("ori"))
+      val out = df.collect().sortBy(_.getLong(0)).toSeq
+      (out, df.queryExecution.executedPlan.toString)
+    }
+    val (compiled, compiledPlan) = run(spark)
+    val (interpreted, interpretedPlan) = run(Sessions.interpreted(spark))
+    assert("""\*\(\d+\) Project""".r.findFirstIn(compiledPlan).isDefined,
+      s"expected a codegen stage:\n$compiledPlan")
+    assert(!interpretedPlan.contains("*("),
+      s"expected no codegen stage:\n$interpretedPlan")
+    assert(Seq(7, 8, 9).forall(c => compiled.exists(r => !r.isNullAt(c))),
+      "the fixture reaches every header parser's accept path")
+    assert(interpreted == compiled)
   }
 }

@@ -370,7 +370,7 @@ class PipelineSpec extends SparkSpec {
     //    byte-identical to the old shift-and-mask slices exactly when
     //    this holds (same global bit index mix)
     for (df <- Seq(emb, hist, edges); center <- Seq(false, true);
-         (words, bpw) <- Seq((4, 12), (3, 4), (2, 31))) {
+         (words, bpw) <- Seq((4, 12), (3, 4), (2, 31), (1, 63))) {
       val mask = (1L << bpw) - 1
       val diverged = df.select(
           VectorFunctions.hyperplaneSignature(col("v"), words * bpw, center)

@@ -91,11 +91,12 @@ class PlanBuildJobsSpec extends SparkSpec {
     "q146_tfidf_cosine" -> "doc-vector checkpoint (Corpus:933)",
     // Stats histogram bounds (min/max/count head) + quantile edges
     "q95_hist_quantiles" -> "Stats histogram bounds",
-    "q109_grouped_quantiles" -> "Stats histogram bounds",
     "q132_quantile_bins" -> "Stats histogram bounds + edges",
     "q154_winsorize" -> "Stats histogram bounds + edges",
     "q171_rfm" -> "Stats histogram bounds + edges",
-    "q96_zorder_layout" -> "Stats histogram bounds",
+    "q96_zorder_layout" ->
+      ("ZOrder global row number (Components.withGlobalRowNumber: " +
+        "range-sort sample + zipWithIndex offsets, ZOrder.scala:57)"),
     "q123_dsir_resample" -> "Stats quantile edges + checkpoint",
     // localCheckpoint reuse barriers in event analytics / sketches
     "q161_kmv_setops" -> "sketch checkpoint (EventsPack:355)",

@@ -4,7 +4,8 @@
 # When Verify ends it prints two defect counts taken from its stderr
 # (which still reaches the terminal): `WindowExec: No Partition Defined`
 # warnings (a window over one task) and `Block rdd_… already exists`
-# messages (two tasks computed the same persisted partition).
+# messages (a task found a persisted partition that another task had
+# stored first, and waited for it: lock contention, not a recomputation).
 set -e -o pipefail
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
