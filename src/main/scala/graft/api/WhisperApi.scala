@@ -65,10 +65,19 @@ final case class NodeRead(db: WhisperDB, row: Row) {
   * holds its nodes in one in-process map: construction pins the initial
   * tables in Spark's in-memory columnar cache and materializes them, and
   * every later snapshot (a write's union, patch or filter over them)
-  * scans that cache through Catalyst's cache substitution instead of
-  * re-opening the source files. The pin uses `cache()`'s MEMORY_AND_DISK
-  * level: an evicted block spills to local disk rather than being
-  * recomputed from a source that may have changed or gone since.
+  * scans that cache instead of re-opening the source files. The pin uses
+  * `cache()`'s MEMORY_AND_DISK level: an evicted block spills to local
+  * disk rather than being recomputed from a source that may have changed
+  * or gone since.
+  *
+  * Every write installs its snapshot compacted ([[Sessions.compact]]):
+  * each table is a frame over the optimized plan of the one the write
+  * built, so later snapshots hold the pinned `InMemoryRelation` directly
+  * and the operators writes stack on it are folded once, at the write,
+  * instead of by every later request. Creates' rows stay one local
+  * relation, PUTs one projection and DELETEs one filter, so a request
+  * plans about the same handful of nodes after a thousand writes as
+  * after one.
   *
   * Every served snapshot runs on a session the facade owns: a clone of
   * the caller's session that compiles no code ([[Sessions.interpreted]]).
@@ -103,13 +112,23 @@ class WhisperApi(initial: WhisperDB,
     * serialization point, minus blocking the readers.
     */
   private val transition = new Object
-  private def mutate[A](f: WhisperDB => Either[ApiError, (WhisperDB, A)]): ApiResult[A] =
+
+  /** Runs write `f` on the current snapshot and installs the snapshot it
+    * built, compacted; returns the installed snapshot with `f`'s value.
+    */
+  private def install[A](f: WhisperDB => Either[ApiError, (WhisperDB, A)])
+      : Either[ApiError, (WhisperDB, A)] =
     transition.synchronized {
-      f(current) match {
-        case Left(err) => err
-        case Right((db2, a)) => current = db2; ApiOk(a)
+      f(current).map { case (db, a) =>
+        val next = db.withState(db.state.copy(
+          nodes = Sessions.compact(db.nodes), nodeFiles = Sessions.compact(db.nodeFiles)))
+        current = next
+        (next, a)
       }
     }
+
+  private def mutate[A](f: WhisperDB => Either[ApiError, (WhisperDB, A)]): ApiResult[A] =
+    install(f).fold(identity, r => ApiOk(r._2))
 
   /** GET /api/nodes (Q1/Q2 with filters + sort + pagination). */
   def listNodes(filters: NodeFilters = NodeFilters(), sort: String = "id",
@@ -167,18 +186,15 @@ class WhisperApi(initial: WhisperDB,
       case e: ApiError => e
     }
 
-  /** `updateNode` returning the snapshot the write produced, so the HTTP
-    * route answers with the node as this write left it even when a later
-    * write has already replaced `current`.
+  /** `updateNode` returning the snapshot the write installed, so the
+    * HTTP route answers with the node as this write left it even when a
+    * later write has already replaced `current`.
     */
   private[api] def patchNode(id: Long, patch: NodePatch): ApiResult[WhisperDB] =
-    mutate { db =>
+    install { db =>
       if (!db.exists(id)) Left(notFound(id))
-      else {
-        val next = db.updateNode(id, patch)
-        Right((next, next))
-      }
-    }
+      else Right((db.updateNode(id, patch), ()))
+    }.fold(identity, r => ApiOk(r._1))
 
   /** DELETE /api/nodes/:id (C5); cascades blob deletes through the
     * configured FileStore (reference GraphDB.cpp:398-407).

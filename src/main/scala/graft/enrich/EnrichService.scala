@@ -126,29 +126,31 @@ class EnrichService(embedder: Embedder, tagger: Tagger,
   }
 
   /** E3: embed every node lacking an embedding and merge the vectors
-    * back. One shuffle (the merge join); provider batching is
-    * per-partition.
+    * back; returns the merged nodes and the number of vectors generated.
+    * Provider batching is per-partition, in the one job that collects
+    * the vectors; the merge joins them as local rows, so reading the
+    * result never calls the provider again.
     */
   def generateMissingEmbeddings(nodes: DataFrame): (DataFrame, Long) = {
-    val spark = nodes.sparkSession
     val emb = embedder
     val missing = embeddingText(nodes.filter(col("embedding").isNull))
       .select(col("id"), col("__text"))
+    val vecs = missing.rdd.mapPartitions { it =>
+      val rows = it.toSeq
+      val out = emb.embed(rows.map(_.getString(1)))
+      rows.iterator.zip(out.iterator).collect { case (r, Some(v)) =>
+        Row(r.getLong(0), v.toSeq)
+      }
+    }.collect()
     val vecSchema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("__new_emb", ArrayType(FloatType), nullable = true)))
-    val vecs = spark.createDataFrame(
-      missing.rdd.mapPartitions { it =>
-        val rows = it.toSeq
-        val out = emb.embed(rows.map(_.getString(1)))
-        rows.iterator.zip(out.iterator).map { case (r, v) =>
-          Row(r.getLong(0), v.map(_.toSeq).orNull)
-        }
-      }, vecSchema)
-    val merged = nodes.join(vecs, Seq("id"), "left")
+    val merged = nodes
+      .join(nodes.sparkSession.createDataFrame(java.util.Arrays.asList(vecs: _*), vecSchema),
+        Seq("id"), "left")
       .withColumn("embedding", coalesce(col("embedding"), col("__new_emb")))
       .drop("__new_emb")
-    (merged, vecs.filter(col("__new_emb").isNotNull).count())
+    (merged, vecs.length.toLong)
   }
 
   /** Candidate edges for V6/V7 under the chosen strategy. Default is

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.api.{ApiOk, WhisperApi}
 import graft.enrich.{EnrichService, MockEmbedder, MockTagger}
 import graft.io.WhisperState
 import graft.model.Node
@@ -43,6 +44,25 @@ class EnrichSpec extends SparkSpec {
       .collect()(0).getSeq[Float](0)
     assert(kept.head == 1f, "existing embedding untouched")
     // identical doc text -> identical embedding (nodes 1,2 differ only by tags)
+  }
+
+  test("E3: generated vectors are made once: reads of the written snapshot " +
+       "and the rest of clustering never call the embedder again") {
+    val counting = new EnrichService(new CountingEmbedder(16), new MockTagger)
+    val api = new WhisperApi(db, counting)
+    CountingEmbedder.texts.set(0)
+    assert(api.generateEmbedding(1L) == ApiOk(1L))
+    assert(CountingEmbedder.texts.get == 3, "the three nodes lacking a vector")
+    assert(api.countNodes() == 4)
+    assert(api.listNodes().collect().forall(!_.isNullAt(10)))
+    assert(api.getNode(2L).isInstanceOf[ApiOk[_]])
+    val ApiOk(similar) = api.similarNodes(1L, 2): @unchecked
+    assert(similar.count() == 2)
+    assert(CountingEmbedder.texts.get == 3, "reads re-ran the embedder")
+
+    CountingEmbedder.texts.set(0)
+    val (_, report) = counting.runClustering(db, 0.75)
+    assert(report.embeddingsGenerated == 3 && CountingEmbedder.texts.get == 3)
   }
 
   test("E6/E7: tag reply parsing + normalization + bank growth") {
@@ -191,4 +211,18 @@ class EnrichSpec extends SparkSpec {
     assert(clusters.length == 3)
     assert(clusters(0).getLong(1) == 2, "pair cluster first (size desc)")
   }
+}
+
+/** A MockEmbedder that counts the texts it embeds, across every task of
+  * the JVM (a task embeds with its own deserialized copy).
+  */
+class CountingEmbedder(dim: Int) extends MockEmbedder(dim) {
+  override def embed(texts: Seq[String]): Seq[Option[Array[Float]]] = {
+    CountingEmbedder.texts.addAndGet(texts.size)
+    super.embed(texts)
+  }
+}
+
+object CountingEmbedder {
+  val texts = new java.util.concurrent.atomic.AtomicLong
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Sessions
-import graft.api.{ApiError, ApiOk, NodeRead, Validation, WhisperApi}
+import scala.jdk.CollectionConverters._
+import graft.api.{ApiError, ApiOk, ApiResult, NodeRead, Validation, WhisperApi}
 import graft.enrich.{EnrichService, MockEmbedder, MockTagger}
 import graft.io.WhisperState
 import graft.model.Node
@@ -199,25 +200,67 @@ class WhisperApiSpec extends SparkSpec {
     assert(api.similarNodes(99L) == ApiError(404, "Node 99 not found"))
   }
 
-  test("the served snapshot answers every read as the caller's session " +
-       "does, before and after writes") {
+  /** Ties on every sortable field but id, duplicate tags, a zero vector,
+    * a vector tied with another, nodes without one; `n` nodes, ids 1 to
+    * `n`, nodes 1 and 3 with files.
+    */
+  private def loadedDb(n: Int): WhisperDB = {
     import spark.implicits._
-    // ties on every sortable field but id, duplicate tags, a zero vector, a
-    // vector tied with another, and nodes without one
     val vecs: Seq[Option[Seq[Float]]] = Seq(Some(Seq(1f, 0f, 0f)), Some(Seq(1f, 0f, 0f)),
       Some(Seq(0f, 0f, 0f)), None, Some(Seq(0.3f, 0.5f, 0.1f)), Some(Seq(-1f, 2f, 0f)),
       Some(Seq(2f, 0f, 0f)), None, Some(Seq(0f, 1f, 0f)), Some(Seq(0.5f, 0.5f, 0.5f)))
-    val nodes = vecs.zipWithIndex.map { case (v, i) =>
+    val nodes = (0 until n).map { i =>
       Node(id = i + 1L, title = s"T${i % 3}", course = 100 + i % 2, subject = s"S${i % 4}",
         description = s"d$i", author = s"A${i % 3}", date = f"2024-01-0${1 + i % 4} 00:00:00",
-        tags = if (i % 5 == 0) Seq("x", "x") else Seq(s"t${i % 3}", "x"), embedding = v)
+        tags = if (i % 5 == 0) Seq("x", "x") else Seq(s"t${i % 3}", "x"),
+        embedding = vecs(i % vecs.size))
     }.toDS().toDF()
     val files = Seq((1L, "a.txt"), (1L, "b.txt"), (3L, "c.txt")).toDF("node_id", "path")
-    val api = new WhisperApi(
-      new WhisperDB(spark, WhisperState(nodes, files, Seq("x"), vecs.size.toLong, vecs.size + 1L)),
+    new WhisperDB(spark, WhisperState(nodes, files, Seq("x"), n.toLong, n + 1L))
+  }
+
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  /** Every read kind of `api` equals the same read of `ref`: count and
+    * list per filter (every sortable field, both orders, each page), get
+    * with files and similar at each k for every id, nodes by tag.
+    */
+  private def assertSameReads(api: WhisperApi, ref: WhisperDB, when: String, ids: Seq[Long],
+                              pages: Seq[(Int, Int)], ks: Seq[Int]): Unit = {
+    val filters = Seq(NodeFilters(), NodeFilters(author = Some("A1")),
+      NodeFilters(course = Some("101"), tag = Some("x")), NodeFilters(title = Some("T2")))
+    for (f <- filters) {
+      assert(api.countNodes(f) == ref.countNodes(f), s"$when: count $f")
+      for (field <- Node.sortableFields.toSeq :+ "unknown"; order <- Seq("asc", "desc");
+           (limit, offset) <- pages)
+        assert(rows(api.listNodes(f, field, order, limit, offset)) ==
+          rows(ref.findNodes(f, field, order, limit, offset)),
+          s"$when: list $f by $field $order limit $limit offset $offset")
+    }
+    for (id <- ids) {
+      val read = api.readNode(id)
+      assert(read.map(_.row) == ref.row(id), s"$when: get $id")
+      api.getNode(id) match {
+        case ApiOk((n, fs)) =>
+          assert(rows(n) == ref.row(id).toSeq && rows(fs) == rows(ref.getNodeFiles(id)),
+            s"$when: get $id")
+        case e => assert(ref.row(id).isEmpty, s"$when: get $id: $e")
+      }
+      for (n <- read; k <- ks)
+        assert(rows(api.similarTo(n, k)) == rows(api.similarTo(NodeRead(ref, n.row), k)),
+          s"$when: similar $id k $k")
+    }
+    for (tag <- (Seq("x", "t1", "t2", "nope") ++ ref.tagBank).distinct)
+      assert(rows(api.nodesByTag(tag)) ==
+        rows(ref.nodes.filter(TagOps.hasTag(tag)).select(Node.schema.fieldNames.map(col): _*)),
+        s"$when: tag $tag")
+  }
+
+  test("the served snapshot answers every read as the caller's session " +
+       "does, before and after writes") {
+    val api = new WhisperApi(loadedDb(10),
       new EnrichService(new MockEmbedder(8), new MockTagger))
 
-    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
     def sameReads(when: String): Unit = {
       val served = api.db
       val ref = new WhisperDB(spark, served.state.copy(
@@ -228,34 +271,8 @@ class WhisperApiSpec extends SparkSpec {
         .queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
       assert(served.nodes.sparkSession ne spark)
       assert(!codegen(served) && codegen(ref))
-
-      val filters = Seq(NodeFilters(), NodeFilters(author = Some("A1")),
-        NodeFilters(course = Some("101"), tag = Some("x")), NodeFilters(title = Some("T2")))
-      for (f <- filters) {
-        assert(api.countNodes(f) == ref.countNodes(f), s"$when: count $f")
-        for (field <- Node.sortableFields.toSeq :+ "unknown"; order <- Seq("asc", "desc");
-             (limit, offset) <- Seq((0, 0), (3, 0), (4, 2), (0, 5)))
-          assert(rows(api.listNodes(f, field, order, limit, offset)) ==
-            rows(ref.findNodes(f, field, order, limit, offset)),
-            s"$when: list $f by $field $order limit $limit offset $offset")
-      }
-      for (id <- 1L to vecs.size + 2) {
-        val read = api.readNode(id)
-        assert(read.map(_.row) == ref.row(id), s"$when: get $id")
-        api.getNode(id) match {
-          case ApiOk((n, fs)) =>
-            assert(rows(n) == ref.row(id).toSeq && rows(fs) == rows(ref.getNodeFiles(id)),
-              s"$when: get $id")
-          case e => assert(ref.row(id).isEmpty, s"$when: get $id: $e")
-        }
-        for (n <- read; k <- Seq(1, 4, 20))
-          assert(rows(api.similarTo(n, k)) == rows(api.similarTo(NodeRead(ref, n.row), k)),
-            s"$when: similar $id k $k")
-      }
-      for (tag <- Seq("x", "t1", "t2", "nope"))
-        assert(rows(api.nodesByTag(tag)) ==
-          rows(ref.nodes.filter(TagOps.hasTag(tag)).select(Node.schema.fieldNames.map(col): _*)),
-          s"$when: tag $tag")
+      assertSameReads(api, ref, when, 1L to 12L,
+        pages = Seq((0, 0), (3, 0), (4, 2), (0, 5)), ks = Seq(1, 4, 20))
     }
 
     sameReads("as loaded")
@@ -267,6 +284,127 @@ class WhisperApiSpec extends SparkSpec {
     assert(api.deleteNode(5L) == ApiOk(5L))
     assert(api.db.row(created).isDefined && api.db.row(5L).isEmpty)
     sameReads("after a create, a PUT and a DELETE")
+  }
+
+  test("every write installs its snapshot compacted: the plans stop growing, " +
+       "and every read equals the read of the lineage the writes built") {
+    val enrich = new EnrichService(new MockEmbedder(8), new MockTagger)
+    val api = new WhisperApi(loadedDb(12), enrich)
+    // the same writes, stacked as WhisperDB builds them, on the same session
+    var lineage = api.db
+    val stamp = "2024-01-03 00:00:00"
+    def write(name: String, served: => ApiResult[_], built: WhisperDB => WhisperDB): Unit = {
+      assert(served.isInstanceOf[ApiOk[_]], name)
+      lineage = built(lineage)
+    }
+    def create(c: Int, name: String): Long = {
+      val n = Node(id = Int.MaxValue, title = s"T${c % 3}", course = 100 + c % 2,
+        subject = s"S${c % 4}", author = s"A${c % 3}", tags = Seq(s"t${c % 3}", name),
+        embedding = Option.when(c % 2 == 0)(Seq(c.toFloat, 1f, 0f)))
+      val ApiOk(id) = api.createNode(n, now = () => stamp): @unchecked
+      val (built, builtId) = lineage.addNode(n.copy(date = stamp))
+      assert(builtId == id, s"create $name")
+      lineage = built
+      id
+    }
+    // ten writes: creates, PUTs and DELETEs of base and created nodes,
+    // attaches and detaches; base nodes 8 to 12 go, one every other cycle
+    var created = Seq.empty[Long]
+    def cycle(c: Int): Unit = {
+      val a = create(c, s"a$c")
+      val b = create(c, s"b$c")
+      val base = c % 6 + 1
+      val pa = NodePatch(title = Some(s"P$c"), course = Some(s"${100 + c % 3}"))
+      val pb = NodePatch(description = Some(s"p$c"), tags = Some(Seq("x", s"t$c")),
+        embedding = Some(Seq(0f, c.toFloat, 1f)))
+      write("PUT created", api.updateNode(a, pa), _.updateNode(a, pa))
+      write("PUT base", api.updateNode(base, pb), _.updateNode(base, pb))
+      write("DELETE created", api.deleteNode(b), _.deleteNode(b))
+      if (c % 2 == 0) write("DELETE base", api.deleteNode(12L - c / 2), _.deleteNode(12L - c / 2))
+      else write("PUT base", api.updateNode(7L, pa), _.updateNode(7L, pa))
+      write("attach created", api.attachFile(a, s"a$c.txt"), _.addFileToNode(a, s"a$c.txt"))
+      write("attach base", api.attachFile(base, s"b$c.txt"), _.addFileToNode(base, s"b$c.txt"))
+      write("detach base", api.detachFile(base, s"b$c.txt"), _.removeFileFromNode(base, s"b$c.txt"))
+      val (owner, path) = created.lastOption.map(p => (p, s"a${c - 1}.txt")).getOrElse((1L, "a.txt"))
+      write("detach", api.detachFile(owner, path), _.removeFileFromNode(owner, path))
+      created :+= a
+    }
+    def planNodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case p => p }.size
+    def sizes(db: WhisperDB): (Int, Int) = (planNodes(db.nodes), planNodes(db.nodeFiles))
+
+    cycle(0)
+    val after10 = sizes(api.db)
+    (1 until 10).foreach(cycle)
+    assert(sizes(api.db) == after10,
+      s"plan nodes after 10 writes $after10, after 100 ${sizes(api.db)}:\n" +
+        api.db.nodes.queryExecution.analyzed.treeString)
+    assert(planNodes(lineage.nodes) > 10 * after10._1, "the lineage stacks every write")
+
+    write("embedding", api.generateEmbedding(created.head),
+      l => l.withState(l.state.copy(nodes = enrich.generateMissingEmbeddings(l.nodes)._1)))
+    write("tags", api.generateTags(2L), enrich.generateTagsForNode(_, 2L)._1)
+    assert(api.getTags == lineage.tagBank && api.health == lineage.size)
+    assertSameReads(api, lineage, "after 102 writes", 1L to created.last + 2,
+      pages = Seq((0, 0), (4, 2)), ks = Seq(1, 4))
+  }
+
+  test("writers racing readers: every count and list a reader sees is one the " +
+       "snapshot passed through, and the final state is exact") {
+    val api = new WhisperApi(loadedDb(10), new EnrichService(new MockEmbedder(8), new MockTagger))
+    val mine = NodeFilters(author = Some("W")) // no loaded node matches
+    // writes take turns on `lock`, so the sets the snapshot passes through
+    // are known; readers run unsynchronized against every write's install
+    val lock = new Object
+    var live = Seq.empty[Long]
+    val passed = java.util.concurrent.ConcurrentHashMap.newKeySet[Set[Long]]()
+    passed.add(Set.empty)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Either[Long, Set[Long]]]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    @volatile var writing = true
+    def thread(body: => Unit): Thread = {
+      val t = new Thread(() => try body catch { case e: Throwable => errors.add(e) })
+      t.start()
+      t
+    }
+    def writer(w: Int): Thread = thread {
+      var own = Seq.empty[Long]
+      for (i <- 0 until 12) lock.synchronized {
+        if (i % 3 == 2) {
+          val id = own.head
+          assert(api.deleteNode(id) == ApiOk(id))
+          own = own.tail
+          live = live.filterNot(_ == id)
+        } else {
+          val ApiOk(id) = api.createNode(Node(id = Int.MaxValue, title = s"W$w-$i",
+            subject = "S", author = "W"), now = () => "2024-01-05 00:00:00"): @unchecked
+          own :+= id
+          live :+= id
+        }
+        passed.add(live.toSet)
+      }
+    }
+    def reader(): Thread = thread {
+      while (writing) {
+        seen.add(Left(api.countNodes(mine)))
+        seen.add(Right(api.listNodes(mine).collect().map(_.getLong(0)).toSet))
+      }
+    }
+    val readers = Seq(reader(), reader())
+    Seq(writer(0), writer(1)).foreach(_.join())
+    writing = false
+    readers.foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+
+    val sizes = passed.asScala.map(_.size.toLong)
+    for (s <- seen.asScala) s match {
+      case Left(count) => assert(sizes.contains(count), s"count $count never held")
+      case Right(ids) => assert(passed.contains(ids), s"list $ids never held")
+    }
+    assert(seen.size > 4, "the readers raced the writers")
+    assert(live.size == 8)
+    assert(api.countNodes(mine) == 8 &&
+      api.listNodes(mine).collect().map(_.getLong(0)).toSeq == live.sorted)
+    assert(api.countNodes() == 18 && api.health == 18)
   }
 
   test("nodesByTag is one filtered scan: a duplicated id comes back once per row") {
